@@ -137,26 +137,17 @@ def audio_near_pairs(
     cfg = cfg or DedupConfig()
     from datasketches_pig_spark.operators.lsh import (
         bucket_pairs,
-        derived_shuffle_partitions,
         release_shard_caches,
     )
 
     release_shard_caches()  # previous operator's expansion cache, if any
     sigs = audio_signature_frame(clips, cfg, id_col).localCheckpoint()
-    # size-derived exchange width from the materialized signature count
-    # (band rows = n_clips × band_count); candidates stay lazy — their
-    # single consumer is the verify join below (r8: one fewer barrier)
-    parts = derived_shuffle_partitions(
-        clips.sparkSession, sigs.count() * cfg.band_count
-    )
+    # candidates stay lazy — their single consumer is the verify join below
+    # (r8: one fewer barrier); exchanges run at the session's shuffle width
     chunks = sigs.filter(F.col("n") > 0).select(
         "id", F.explode("bands").alias("band_key")
     )
-    cand = (
-        bucket_pairs(chunks, "band_key", "id", cap=bucket_cap, num_partitions=parts)
-        .repartition(parts, "a", "b")
-        .distinct()
-    )
+    cand = bucket_pairs(chunks, "band_key", "id", cap=bucket_cap).distinct()
 
     sa = sigs.select(
         F.col("id").alias("a"), F.col("kmv").alias("ka"), F.col("n").alias("na")
@@ -195,18 +186,8 @@ def audio_exact_pairs(
     (Jaccard over hot-grammed pairs then undercounts, same trade-off as the
     text operator documents); ``audio_near_pairs`` is the production path."""
     cfg = cfg or DedupConfig()
-    from datasketches_pig_spark.operators.lsh import derived_shuffle_partitions
-
     sigs = audio_signature_frame(clips, cfg, id_col).localCheckpoint()
-    # size-derived exchange width (gram rows ≤ n_clips × kmv_k): the
-    # self-join and the pair aggregation otherwise run 2×cores-task waves
-    # over a few-thousand-row gate corpus (guide §2, scale-adaptive
-    # partitioning; the repartitions pin the width IN the plan and the
-    # join/agg reuse them, so no exchange is added)
-    parts = derived_shuffle_partitions(
-        clips.sparkSession, sigs.count() * cfg.kmv_k
-    )
-    grams = sigs.select("id", F.explode("kmv").alias("g")).repartition(parts, "g")
+    grams = sigs.select("id", F.explode("kmv").alias("g"))
     if max_gram_freq:
         hot = grams.groupBy("g").count().filter(F.col("count") > max_gram_freq)
         grams = grams.join(hot.select("g"), "g", "left_anti")
@@ -214,7 +195,6 @@ def audio_exact_pairs(
         grams.select(F.col("id").alias("a"), "g")
         .join(grams.select(F.col("id").alias("b"), "g"), "g")
         .filter(F.col("a") < F.col("b"))
-        .repartition(parts, "a", "b")
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
     )

@@ -66,11 +66,10 @@ def image_near_pairs(
     candidate frame stays LAZY (its single consumer is the final join, so
     the former distinct+localCheckpoint barrier bought nothing — shard
     caches are released at operator start instead, the residue rule
-    ``operators/lsh.py`` documents); expansion exchanges are size-derived
-    from the materialized signature count (``derived_shuffle_partitions``)."""
+    ``operators/lsh.py`` documents); expansion exchanges run at the
+    session's shuffle width."""
     from datasketches_pig_spark.operators.lsh import (
         bucket_pairs,
-        derived_shuffle_partitions,
         release_shard_caches,
     )
     from datasketches_pig_spark.textops.dedup import simhash_combo_key_array
@@ -79,21 +78,13 @@ def image_near_pairs(
     sigs = image_feature_stage(images).select(
         F.col("image_id").alias("id"), F.col("dhash").alias("simhash")
     ).localCheckpoint()
-    import math
-
-    n_keys = sigs.count() * math.comb(max_hamming + 3, 3)
-    parts = derived_shuffle_partitions(images.sparkSession, n_keys)
     chunks = sigs.select(
         "id",
         F.explode(simhash_combo_key_array(F.col("simhash"), max_hamming)).alias(
             "ckey"
         ),
     )
-    cand = (
-        bucket_pairs(chunks, "ckey", "id", cap=bucket_cap, num_partitions=parts)
-        .repartition(parts, "a", "b")
-        .distinct()
-    )
+    cand = bucket_pairs(chunks, "ckey", "id", cap=bucket_cap).distinct()
     sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("ha"))
     sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("hb"))
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.operators.lsh import bucket_summaries, candidate_pairs
-from datasketches_pig_spark.operators.stages import bands_stage, signature_stage
+from datasketches_pig_spark.operators.stages import signature_stage
 from datasketches_pig_spark.operators.verify import verify_pairs
 
 
@@ -54,12 +54,13 @@ def all_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     r8: ONE projection + ONE explode over a concatenated array instead of a
     3-branch union (2 explodes + a select) — same rows, one scan of the
     signature table and a third of the codegen.  Zero-shingle modalities
-    contribute no band rows (the degenerate-bucket rule ``bands_stage``
-    documents); the exact key always rides."""
+    contribute no band rows (they would all share one degenerate bucket);
+    the exact key always rides.  ``F.concat`` is NULL when any input is, so
+    each modality term is coalesced: a NULL band array drops only itself."""
     empty = F.array().cast("array<long>")
     combined = F.concat(
-        F.when(F.col("n_text_shingles") > 0, F.col("text_bands")).otherwise(empty),
-        F.when(F.col("n_audio_shingles") > 0, F.col("audio_bands")).otherwise(empty),
+        F.coalesce(F.when(F.col("n_text_shingles") > 0, F.col("text_bands")), empty),
+        F.coalesce(F.when(F.col("n_audio_shingles") > 0, F.col("audio_bands")), empty),
         F.array(F.col("exact_key")),
     )
     return signatures.select("clip_id", F.explode(combined).alias("band_key"))

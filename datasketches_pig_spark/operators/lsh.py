@@ -37,8 +37,7 @@ SALT_SHARDS = 16
 # frame is returned lazily, so the cache cannot be dropped inside the
 # operator without forcing eager evaluation of a potentially huge pre-
 # distinct pair stream.  NOTE a single query may call _salted_pairs more
-# than once before consuming anything (the clip pipeline unions
-# candidate_pairs + exact_dup_pairs), so the release is NOT automatic here;
+# than once before consuming anything, so the release is NOT automatic here;
 # top-level operators call release_shard_caches() once their candidates are
 # materialized (or at their own start, bounding a long-lived session's
 # residue to the last query's caches).
@@ -98,83 +97,15 @@ def _expand(df: DataFrame, pairs: Column) -> DataFrame:
     )
 
 
-def _pairs_expr(m: Column, bucket_n: Column, cap: int, all_pairs_small: bool) -> Column:
-    if all_pairs_small:
-        return F.when(bucket_n <= cap, _all_pairs(m)).otherwise(_star_pairs(m))
-    return _star_pairs(m)
-
-
-def derived_shuffle_partitions(
-    spark, n_rows: int, rows_per_task: int = 500, floor: int = 8
-) -> int:
-    """Scale-adaptive partition count for the expansion shuffles (guide §2:
-    derive partitioning from input size, not a constant tuned to one
-    scale).  Capped at the session's configured shuffle partitions, so at
-    production row counts the behavior is exactly the configured one; a
-    bounded gate corpus (a few hundred ids → a few thousand band rows) gets
-    a handful of tasks instead of 2×cores waves of near-empty ones
-    (measured on the 150-image JPEG gate: 1.9-2.4 s vs 2.3-3.0 s warm)."""
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    import math
-
-    return max(min(cap, math.ceil(n_rows / rows_per_task)), min(floor, cap))
-
-
-def _salted_pairs(
-    keyed: DataFrame,
-    key: str,
-    cap: int,
-    all_pairs_small: bool,
-    adaptive: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def _salted_pairs(keyed: DataFrame, key: str, cap: int) -> DataFrame:
     """(key, clip_id) rows → (a, b) pairs with per-reducer state bounded by
-    salting.  ``all_pairs_small``: emit all-pairs for buckets ≤ cap (LSH
-    candidates) or always star-link (exact-key cliques).
-
-    ``adaptive`` (opt-in, default off): probe the bucket-size histogram
-    first — a count-only aggregation — and when no bucket exceeds cap+1 run
-    the single-shuffle exact expansion instead of the two-level salted form.
-    Measured on the 94k-clip scaling input (3M band rows, /dev/shm shuffle):
-    the probe + persist machinery costs MORE than the level-1 pass it skips
-    (8 cores: 5.1-5.7 s adaptive vs 4.3 s salted; 2 cores: 13.2 vs 9.5 s),
-    because the salted path streams once through two cheap shuffles while
-    the probe adds a cache materialization plus an extra driver action.  The
-    salted two-level form is therefore BOTH the bounded-state path and the
-    fast path here; ``adaptive=True`` remains available for callers whose
-    shuffle medium is slow relative to an extra cached pass.  The probe
-    consumes ``keyed`` once more, so it is persisted in adaptive mode."""
-    if adaptive:
-        keyed = keyed.persist()
-        mx_row = (
-            keyed.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"))
-            .collect()
-        )
-        mx = mx_row[0]["mx"] or 0
-        if mx <= cap + 1:
-            # no shard could truncate at level 1, so the salted form would
-            # reproduce exactly this: one shuffle, state ≤ cap+1 members
-            buckets = keyed.groupBy(key).agg(
-                F.array_sort(F.collect_list("clip_id")).alias("members"),
-                F.count(F.lit(1)).alias("bucket_n"),
-            ).filter(F.col("bucket_n") >= 2)
-            return _expand(
-                buckets,
-                _pairs_expr(F.col("members"), F.col("bucket_n"), cap, all_pairs_small),
-            )
+    salting: all-pairs for buckets ≤ cap, star links above it.  Exchange
+    widths are the session's ``spark.sql.shuffle.partitions``: pinning one
+    with ``repartition(n, keys)`` would move each aggregation's partial
+    aggregate above its exchange."""
     salted = keyed.withColumn(
         "__salt", F.pmod(F.xxhash64("clip_id"), F.lit(SALT_SHARDS))
     )
-    # num_partitions (callers with a bounded, already-counted input): pin
-    # the expansion's two aggregation exchanges to a size-derived partition
-    # count IN THE PLAN (repartition on the exact grouping keys — the agg
-    # reuses the exchange, so this substitutes, not adds, an exchange).
-    # Conf-based scoping would not survive lazy execution of the returned
-    # frame; this does.
-    if num_partitions is not None:
-        salted = salted.repartition(num_partitions, key, "__salt")
     # level-1 lists stay unsorted — only the bounded level-2 arrays are
     # sorted; the shard star needs just the min element.  persist(): two
     # consumers below (shard stars + level-2 summaries) must not re-run the
@@ -200,39 +131,28 @@ def _salted_pairs(
     )
 
     # level-2: per-bucket totals; state ≤ SALT_SHARDS × (cap + 1) members
-    if num_partitions is not None:
-        summaries = summaries.repartition(num_partitions, key)
     buckets = summaries.groupBy(key).agg(
         F.array_sort(F.flatten(F.collect_list("m"))).alias("members"),
         F.sum("sz").alias("bucket_n"),
     ).filter(F.col("bucket_n") >= 2)
 
+    members = F.col("members")
     bucket_pairs = _expand(
-        buckets, _pairs_expr(F.col("members"), F.col("bucket_n"), cap, all_pairs_small)
+        buckets,
+        F.when(F.col("bucket_n") <= cap, _all_pairs(members)).otherwise(
+            _star_pairs(members)
+        ),
     )
 
     return bucket_pairs.unionByName(shard_stars)
 
 
-def bucket_pairs(
-    keyed: DataFrame,
-    key: str,
-    id_col: str,
-    cap: int,
-    all_pairs_small: bool = True,
-    adaptive: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:
     """Public form of the salted bucket-pair expansion for any (key, id)
     frame — used by the document-dedup operators too.  Returns (a, b) with
-    a < b, not distinct.  ``num_partitions``: size-derived exchange width
-    for bounded inputs (see ``derived_shuffle_partitions``); None keeps the
-    session's shuffle-partition conf."""
+    a < b, not distinct."""
     renamed = keyed.select(F.col(key), F.col(id_col).alias("clip_id"))
-    out = _salted_pairs(
-        renamed, key, cap, all_pairs_small, adaptive, num_partitions=num_partitions
-    )
-    return out
+    return _salted_pairs(renamed, key, cap)
 
 
 def bucket_summaries(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:
@@ -328,30 +248,8 @@ def merge_bucket_summaries(old: DataFrame, new: DataFrame, cap: int) -> DataFram
     )
 
 
-def candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig, num_partitions: int | None = None
-) -> DataFrame:
+def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(clip_id, band_key) → candidate (a, b) pairs with a < b (NOT distinct:
-    the caller unions exact-dup pairs and dedupes once).  ``num_partitions``:
-    size-derived exchange width (``derived_shuffle_partitions``) from a
-    caller that knows the band-row count; None keeps the session conf."""
-    return _salted_pairs(
-        bands,
-        "band_key",
-        cfg.max_bucket_size,
-        all_pairs_small=True,
-        num_partitions=num_partitions,
-    )
-
-
-def exact_dup_pairs(signatures: DataFrame) -> DataFrame:
-    """Byte-identical payload fast path: star-link every clip group sharing an
-    exact payload key (exact groups are cliques by construction, the star
-    carries full connectivity; salted, so a viral byte-identical payload at
-    10^12 scale never concentrates on one reducer)."""
-    return _salted_pairs(
-        signatures.select("exact_key", "clip_id"),
-        "exact_key",
-        cap=1,
-        all_pairs_small=False,
-    )
+    the caller dedupes once).  The exact-payload key rides ``bands`` as one
+    more band row per clip (``incremental.all_bands``)."""
+    return _salted_pairs(bands, "band_key", cfg.max_bucket_size)

@@ -156,22 +156,3 @@ def signature_stage(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
             )
 
     return clips.mapInPandas(run, schema=SIGNATURE_SCHEMA)
-
-
-BANDS_SCHEMA = "clip_id string, band_key long"
-
-
-def bands_stage(signatures: DataFrame, cfg: DedupConfig, modality: str) -> DataFrame:
-    """signatures → (clip_id, band_key) rows, ``band_count`` per clip.
-
-    band_key folds (modality, band_id, bucket_hash) into one 64-bit key
-    (computed inside ``signature_stage``'s Arrow pass); this stage is a pure
-    relational explode — whole-stage codegen, no Python.  Clips with no
-    shingles are dropped (they would all share one degenerate bucket).
-    """
-    import pyspark.sql.functions as F
-
-    return (
-        signatures.filter(F.col(f"n_{modality}_shingles") > 0)
-        .select("clip_id", F.explode(f"{modality}_bands").alias("band_key"))
-    )

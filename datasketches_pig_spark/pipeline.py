@@ -190,29 +190,11 @@ def run_pipeline(
         materialize=False,
     )
 
-    # size-derived exchange width for the expansion + distinct (guide §2:
-    # partitioning from input size, not a constant tuned to one scale):
-    # band rows = n_sigs × (text bands + audio bands + exact key).  The
-    # count is free — the signatures stage just materialized (rows_out) or
-    # resumed from a counted manifest.  Capped at the session conf, so a
-    # production-size corpus keeps the configured width (at 20k rows/task
-    # the 189k-clip scaling corpus derives ~600 → cap); the measured win is
-    # at bounded corpora: 2000-group bench pipeline 6.1-10.4 s → 3.5-4.7 s
-    # wall when these waves stop running 2×cores near-empty tasks.
-    n_sigs = next(
-        (e.get("rows_out") for e in reversed(lineage) if e["stage"] == "signatures"),
-        None,
-    ) or signatures.count()
-    from datasketches_pig_spark.operators.lsh import derived_shuffle_partitions
-
-    cand_parts = derived_shuffle_partitions(
-        spark, n_sigs * (2 * cfg.band_count + 1), rows_per_task=20_000
-    )
+    # exchange widths follow the session's spark.sql.shuffle.partitions: no
+    # repartition pin, so the (a, b) distinct keeps its map-side partial
+    # aggregate below the exchange
     candidates = stage(
-        "candidates",
-        lambda: candidate_pairs(bands, cfg, num_partitions=cand_parts)
-        .repartition(cand_parts, "a", "b")
-        .distinct(),
+        "candidates", lambda: candidate_pairs(bands, cfg).distinct()
     )
 
     if store and not lineage[-1].get("resumed"):
@@ -248,6 +230,12 @@ def run_pipeline(
 
     release_shard_caches()
 
+    # the signature count gates verify's broadcast joins; it is free when the
+    # signatures stage just materialized (rows_out), counted on resume
+    n_sigs = next(
+        (e.get("rows_out") for e in reversed(lineage) if e["stage"] == "signatures"),
+        None,
+    ) or signatures.count()
     verified = stage(
         "verified",
         lambda: verify_pairs(

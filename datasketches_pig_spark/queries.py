@@ -1493,17 +1493,13 @@ def q_dedup_mjpeg(spark, sf_dir):
     dHash, brute-force shared-frame counts; the generator refuses to emit
     on any decoder disagreement.  Reference n/a (LLM-pipeline brief)."""
     from datasketches_pig_spark.data.videos import synth_video_frame
-    from datasketches_pig_spark.operators.lsh import derived_shuffle_partitions
     from datasketches_pig_spark.videoops.frames import video_near_pairs
 
     ids = (
         _t(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 120)
     )
-    # bounded gate corpus (< 120 videos × ~8 sampled frames): size-derived
-    # exchange width instead of 2×cores-task waves
-    parts = derived_shuffle_partitions(spark, 120 * 8)
     return video_near_pairs(
-        synth_video_frame(ids), stride=1, min_shared_frames=2, num_partitions=parts
+        synth_video_frame(ids), stride=1, min_shared_frames=2
     ).select("a", "b", F.col("shared_frames").cast("long").alias("shared_frames"))
 
 
@@ -1560,18 +1556,15 @@ def q_dedup_gif_anim(spark, sf_dir):
         synth_gif_video_bytes,
         synth_video_frame,
     )
-    from datasketches_pig_spark.operators.lsh import derived_shuffle_partitions
     from datasketches_pig_spark.videoops.frames import video_near_pairs
 
     ids = (
         _t(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 120)
     )
-    parts = derived_shuffle_partitions(spark, 120 * 8)
     return video_near_pairs(
         synth_video_frame(ids, bytes_fn=synth_gif_video_bytes),
         stride=1,
         min_shared_frames=2,
-        num_partitions=parts,
     ).select("a", "b", F.col("shared_frames").cast("long").alias("shared_frames"))
 
 

@@ -197,10 +197,8 @@ def streaming_replay_stats(
             # before hashing, a per-batch per-row cost; distinct_users is
             # identical below k either way (count of distinct hashes =
             # count of distinct users, the exact-below-k gate regime)
-            users = pdf["user_id"].to_numpy()
-            if users.dtype != np.int64:
-                mask = pd.notna(pdf["user_id"]).to_numpy()
-                users = pdf["user_id"][mask].to_numpy(dtype=np.int64)
+            # exact int64: nulls arrive flagged in user_null (see keyed below)
+            users = pdf["user_id"].to_numpy(np.int64)[~pdf["user_null"].to_numpy(bool)]
             h1, _ = murmur3_long_batch(users, seed)
             sketch = np.unique(np.concatenate([sketch, h1]))[:k]
         state.update((int(n), float(s), sketch.view(np.int64).tolist()))
@@ -218,7 +216,16 @@ def streaming_replay_stats(
             }
         )
 
-    return events.groupBy("event_type").applyInPandasWithState(
+    # a nullable long column with a null in the Arrow batch reaches pandas as
+    # float64, which collapses ids above 2^53 (landmine 8): hand the kernel a
+    # null-free user_id plus an explicit null flag instead
+    keyed = events.select(
+        "event_type",
+        F.coalesce("user_id", F.lit(0).cast("long")).alias("user_id"),
+        F.col("user_id").isNull().alias("user_null"),
+        "value",
+    )
+    return keyed.groupBy("event_type").applyInPandasWithState(
         update,
         outputStructType=_REPLAY_OUT,
         stateStructType=_REPLAY_STATE,

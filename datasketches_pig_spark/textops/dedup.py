@@ -58,7 +58,6 @@ def word_ngrams(
     text_col: str,
     n: int = 3,
     char_fallback_n: int | None = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(id, shingle) distinct word n-grams, relationally (no UDF).
 
@@ -89,12 +88,7 @@ def word_ngrams(
                 ),
             ).otherwise(F.array().cast("array<string>"))
         )
-    grams = toks.select("id", F.explode(gram_arr).alias("shingle"))
-    # num_partitions (callers with a known-small corpus): pin the distinct's
-    # exchange width in-plan — the dedup reuses the repartition exchange
-    if num_partitions is not None:
-        grams = grams.repartition(num_partitions, "id", "shingle")
-    return grams.distinct()
+    return toks.select("id", F.explode(gram_arr).alias("shingle")).distinct()
 
 
 def exact_dedup(
@@ -263,9 +257,7 @@ def minhash_stage(
     )
 
 
-def minhash_lsh_candidates(
-    sigs: DataFrame, cap: int = 64, num_partitions: int | None = None
-) -> DataFrame:
+def minhash_lsh_candidates(sigs: DataFrame, cap: int = 64) -> DataFrame:
     """(a, b) candidate pairs from band-bucket equality — now a pure
     relational explode of the precomputed band keys (whole-stage codegen, no
     Python) feeding the salted single-shuffle bucket expansion.
@@ -283,12 +275,7 @@ def minhash_lsh_candidates(
     # pipeline: hot buckets star-link, small buckets exact all-pairs)
     from datasketches_pig_spark.operators.lsh import bucket_pairs
 
-    pairs = bucket_pairs(
-        bands, "band_key", "id", cap=cap, num_partitions=num_partitions
-    )
-    if num_partitions is not None:
-        pairs = pairs.repartition(num_partitions, "a", "b")
-    return pairs.distinct()
+    return bucket_pairs(bands, "band_key", "id", cap=cap).distinct()
 
 
 _PREFIX_REJECT_DELTA = 1e-12  # per-pair misroute probability of the KL reject
@@ -391,10 +378,7 @@ def minhash_dedup_pairs(
     physical plan only — both routes produce identical pairs (parity test
     ``test_minhash_prefix_verify_parity``); pass
     ``prefix_min_mean_shingles=0`` to force the screen regardless."""
-    from datasketches_pig_spark.operators.lsh import (
-        derived_shuffle_partitions,
-        release_shard_caches,
-    )
+    from datasketches_pig_spark.operators.lsh import release_shard_caches
 
     if prefix_verify is not None:
         min_mean = (
@@ -407,20 +391,9 @@ def minhash_dedup_pairs(
         ):
             prefix_verify = None
 
-    # size-derived exchange width for the band expansion (guide §2): band
-    # rows = n_docs × band_count; the count is metadata-cheap on a parquet
-    # source and the result is capped at the session conf, so a production
-    # corpus keeps the configured width while a bounded one stops paying
-    # 2×cores near-empty tasks per shuffle wave
-    band_count = 32
-    parts = derived_shuffle_partitions(
-        df.sparkSession, df.count() * band_count, rows_per_task=20_000
-    )
-
     sigs = minhash_stage(
         df, id_col, text_col, n, num_perm, seed, char_fallback_n,
         kmv_prefix=prefix_verify or 64,
-        band_count=band_count,
     )
     exact_prefix = None
     if prefix_verify is not None:
@@ -430,11 +403,11 @@ def minhash_dedup_pairs(
         # screen, whose own localCheckpoint materializes the whole chain in
         # one job (one fewer barrier than checkpointing candidates first)
         sigs = sigs.localCheckpoint()
-        cands = minhash_lsh_candidates(sigs, num_partitions=parts)
+        cands = minhash_lsh_candidates(sigs)
         cands, exact_prefix = _prefix_screen(cands, sigs, threshold, prefix_verify)
         release_shard_caches()  # screen is materialized; drop the shard cache
     else:
-        cands = minhash_lsh_candidates(sigs, num_partitions=parts).localCheckpoint()
+        cands = minhash_lsh_candidates(sigs).localCheckpoint()
         release_shard_caches()  # cands is materialized; drop the shard cache
 
     cand_ids = (
@@ -443,25 +416,15 @@ def minhash_dedup_pairs(
         .distinct()
     )
     cand_docs = df.join(cand_ids, id_col, "left_semi")
-    # the verify only ever shingles candidate docs — a small multiple of the
-    # (materialized, counted) candidate-pair set; derive its widths from that
-    vparts = derived_shuffle_partitions(
-        df.sparkSession, cands.count() * 150, rows_per_task=20_000
-    )
     grams = word_ngrams(
-        cand_docs, id_col, text_col, n, char_fallback_n, num_partitions=vparts
+        cand_docs, id_col, text_col, n, char_fallback_n
     ).localCheckpoint()
-    sizes = (
-        grams.repartition(vparts, "id")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-    )
+    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     ga = grams.select(F.col("id").alias("a"), "shingle")
     gb = grams.select(F.col("id").alias("b"), "shingle")
     common = (
         cands.join(ga, "a")
         .join(gb, ["b", "shingle"])
-        .repartition(vparts, "a", "b")
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
@@ -802,21 +765,9 @@ def simhash_near_pairs(
                 }
             )
 
-    from datasketches_pig_spark.operators.lsh import (
-        derived_shuffle_partitions,
-        release_shard_caches,
-    )
+    from datasketches_pig_spark.operators.lsh import release_shard_caches
 
     release_shard_caches()  # previous operator's expansion cache, if any
-    # size-derived exchange width: chunk rows = n_docs × C(h+3,3) (count is
-    # metadata-cheap on a parquet source; capped at the session conf)
-    import math
-
-    parts = derived_shuffle_partitions(
-        df.sparkSession,
-        df.count() * math.comb(max_hamming + 3, 3),
-        rows_per_task=20_000,
-    )
     sigs = (
         _spread_scan(df.select(id_col, text_col))
         .mapInPandas(
@@ -831,11 +782,7 @@ def simhash_near_pairs(
     # a materialization for nothing; the shard cache persists until the
     # next operator's release-at-start (the residue rule operators/lsh.py
     # documents)
-    cand = (
-        bucket_pairs(chunks, "ckey", "id", cap=bucket_cap, num_partitions=parts)
-        .repartition(parts, "a", "b")
-        .distinct()
-    )
+    cand = bucket_pairs(chunks, "ckey", "id", cap=bucket_cap).distinct()
     sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("sim_a"))
     sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("sim_b"))
     ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))

@@ -132,26 +132,17 @@ def video_near_pairs(
     stride: int = 5,
     max_hamming: int = 3,
     min_shared_frames: int = 2,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-duplicate video pairs: sampled-frame dHashes bucket by exact
     64-bit value (a near-dup pair of videos shares many visually-identical
     sampled frames), pairs scored by the count of matching frame hashes.
     Salted bucket expansion — a viral still-frame shared by millions of
-    videos star-links instead of exploding.  ``num_partitions``: optional
-    size-derived exchange width for bounded corpora (the whole operator is
-    lazy, so callers that know their corpus is small pass it; None keeps
-    the session conf)."""
+    videos star-links instead of exploding."""
     from datasketches_pig_spark.operators.lsh import bucket_pairs
 
     frames = frame_sample_stage(videos, stride)
     keyed = frames.select(F.col("dhash").alias("fkey"), F.col("video_id").alias("vid"))
-    keyed = keyed.repartition(num_partitions, "fkey", "vid") if num_partitions else keyed
-    pairs = bucket_pairs(
-        keyed.distinct(), "fkey", "vid", cap=64, num_partitions=num_partitions
-    )
-    if num_partitions:
-        pairs = pairs.repartition(num_partitions, "a", "b")
+    pairs = bucket_pairs(keyed.distinct(), "fkey", "vid", cap=64)
     return (
         pairs.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("shared_frames"))

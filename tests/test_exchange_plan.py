@@ -1,0 +1,76 @@
+"""Exchange widths follow the session's ``spark.sql.shuffle.partitions``:
+the LSH/near-pair operators pin no ``repartition(n, keys)`` width, so every
+(a, b) aggregation keeps its map-side partial aggregate below its exchange
+(a pin moves the partial aggregate above the exchange, shuffling every raw
+pair).  Asserted on the executed plan of the pipeline's candidates frame and
+of the MJPEG gate query (a ``bucket_pairs`` caller via ``video_near_pairs``)."""
+
+import re
+
+from conftest import SF_DIR
+
+from datasketches_pig_spark.config import DedupConfig
+from datasketches_pig_spark.data.clips import generate_clips_pandas
+from datasketches_pig_spark.pipeline import run_pipeline
+
+_NODE = re.compile(r"^([ :+\-]*)(?:\*\(\d+\) )?(.*)$")
+_AB = r"a#\d+L?, b#\d+L?"
+
+
+def _ancestors(nodes, i):
+    col = nodes[i][0]
+    for j in range(i - 1, -1, -1):
+        if nodes[j][0] < col:
+            col = nodes[j][0]
+            yield nodes[j][1]
+
+
+def _assert_pair_exchange_shape(plan: str) -> None:
+    """No REPARTITION_BY_NUM exchange above the Arrow kernels (a corpus
+    generator may still spread its input ids before one), and every hash
+    exchange on (a, b) has a partial HashAggregate on (a, b) as its direct
+    child."""
+    nodes = [(len(m.group(1)), m.group(2)) for m in map(_NODE.match, plan.splitlines())]
+    found = 0
+    for i, (col, text) in enumerate(nodes):
+        if "REPARTITION_BY_NUM" in text:
+            assert any(
+                t.startswith("MapInPandas") for t in _ancestors(nodes, i)
+            ), f"pinned exchange width on the pair side: {text}\n{plan}"
+        if not re.match(rf"Exchange hashpartitioning\({_AB}, \d+\)", text):
+            continue
+        found += 1
+        child_col, child = nodes[i + 1]
+        assert child_col > col and re.match(
+            rf"HashAggregate\(keys=\[{_AB}\]", child
+        ), f"(a, b) exchange without a partial aggregate below it:\n{plan}"
+    assert found, plan
+
+
+def test_pipeline_candidates_keep_partial_distinct(spark, monkeypatch):
+    clips_pdf, _, _ = generate_clips_pandas(20, seed=5)
+    clips = spark.createDataFrame(clips_pdf)
+    checkpointed = []
+    cls = type(clips)
+    original = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    run_pipeline(spark, clips, DedupConfig())
+    monkeypatch.undo()
+    # the candidates stage is the first checkpointed (a, b) frame
+    candidates = next(df for df in checkpointed if df.columns == ["a", "b"])
+    _assert_pair_exchange_shape(
+        candidates._jdf.queryExecution().executedPlan().toString()
+    )
+
+
+def test_video_gate_keeps_partial_pair_count(spark):
+    from datasketches_pig_spark.queries import q_dedup_mjpeg
+
+    out = q_dedup_mjpeg(spark, SF_DIR)
+    assert out.collect()
+    _assert_pair_exchange_shape(out._jdf.queryExecution().executedPlan().toString())

@@ -424,3 +424,24 @@ def test_fold_history_refuses_under_held_lock(spark, tmp_path):
         fold_history(
             spark, dummy, dummy, dummy, DedupConfig(), str(tmp_path), "locked"
         )
+
+
+def test_all_bands_null_band_array_keeps_exact_key(spark):
+    """A NULL band array with a positive shingle count drops only its own
+    modality's rows: the other modality's bands and the exact-key row
+    survive (``F.concat`` of a NULL input is NULL)."""
+    from datasketches_pig_spark.incremental import all_bands
+
+    sigs = spark.createDataFrame(
+        [
+            ("c1", None, 5, [10, 11], 2, 99),
+            ("c2", [1, 2], 3, None, 0, 98),
+            ("c3", None, 4, None, 6, 97),
+        ],
+        "clip_id string, text_bands array<long>, n_text_shingles int, "
+        "audio_bands array<long>, n_audio_shingles int, exact_key long",
+    )
+    got = {}
+    for r in all_bands(sigs, DedupConfig()).collect():
+        got.setdefault(r["clip_id"], set()).add(r["band_key"])
+    assert got == {"c1": {10, 11, 99}, "c2": {1, 2, 98}, "c3": {97}}

@@ -5,7 +5,7 @@ for small buckets."""
 import pyspark.sql.functions as F
 
 from datasketches_pig_spark.config import DedupConfig
-from datasketches_pig_spark.operators.lsh import candidate_pairs, exact_dup_pairs
+from datasketches_pig_spark.operators.lsh import candidate_pairs
 from datasketches_pig_spark.operators.unionfind import connected_components
 
 
@@ -32,41 +32,6 @@ def test_hot_bucket_stays_linear_and_connected(spark):
     vertices = hot.select("clip_id")
     comp = connected_components(hot_edges, vertices)
     assert comp.select("cluster_id").distinct().count() == 1
-
-
-def test_exact_dup_star_connectivity(spark):
-    sigs = spark.range(500).select(
-        F.format_string("c_%04d", F.col("id")).alias("clip_id"),
-        F.lit(99).alias("exact_key"),
-    )
-    pairs = exact_dup_pairs(sigs).distinct()
-    assert pairs.count() < 2 * 500  # star, not clique
-    comp = connected_components(pairs, sigs.select("clip_id"))
-    assert comp.select("cluster_id").distinct().count() == 1
-
-
-def test_adaptive_matches_salted_path(spark):
-    # adaptive probe must produce the identical pair set as the forced
-    # two-level salted form, on data with every bucket under the cap
-    from datasketches_pig_spark.operators.lsh import bucket_pairs
-
-    bands = spark.range(200).select(
-        F.format_string("c_%03d", F.col("id")).alias("cid"),
-        (F.col("id") % 40).alias("bkey"),  # 40 buckets of 5 members
-    )
-    fast = {
-        tuple(r)
-        for r in bucket_pairs(bands, "bkey", "cid", cap=64, adaptive=True)
-        .distinct()
-        .collect()
-    }
-    slow = {
-        tuple(r)
-        for r in bucket_pairs(bands, "bkey", "cid", cap=64, adaptive=False)
-        .distinct()
-        .collect()
-    }
-    assert fast == slow and len(fast) == 40 * 10  # exact all-pairs per bucket
 
 
 def test_bucket_summaries_invariants(spark):

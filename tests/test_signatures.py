@@ -288,21 +288,38 @@ def test_fingerprint_batch_matches_scalar_spec():
 
 
 def test_simhash_combo_keys_np_matches_codegen(spark):
-    """The Arrow-pass numpy combo keys must equal the codegen expression
-    form bit for bit (both remain in the tree; the banding guarantee rests
-    on identical key values)."""
+    """The Arrow-pass numpy combo keys must equal both codegen expression
+    forms bit for bit — the per-combo trees and the packed-literal
+    ``transform`` array (all remain in the tree; the banding guarantee
+    rests on identical key values)."""
     import pyspark.sql.functions as F
 
     from datasketches_pig_spark.operators.signatures import simhash_combo_keys_np
-    from datasketches_pig_spark.textops.dedup import _simhash_combo_keys
+    from datasketches_pig_spark.textops.dedup import (
+        _simhash_combo_keys,
+        simhash_combo_key_array,
+    )
 
     rng = np.random.RandomState(7)
     sims = rng.randint(-(2**63), 2**63 - 1, size=100, dtype=np.int64)
-    for h in (3, 6):
-        df = spark.createDataFrame([(int(s),) for s in sims], "simhash long")
+    df = spark.createDataFrame(
+        [(i, int(s)) for i, s in enumerate(sims)], "row long, simhash long"
+    )
+    for h in (3, 4, 6):
+        want = simhash_combo_keys_np(sims, h)
         got_sql = np.array(
-            df.select(
+            df.orderBy("row").select(
                 F.array(*_simhash_combo_keys(F.col("simhash"), h)).alias("k")
             ).toPandas()["k"].tolist()
         )
-        assert np.array_equal(got_sql, simhash_combo_keys_np(sims, h))
+        assert np.array_equal(got_sql, want), h
+        exploded = (
+            df.select(
+                "row",
+                F.posexplode(simhash_combo_key_array(F.col("simhash"), h)),
+            )
+            .orderBy("row", "pos")
+            .toPandas()
+        )
+        got_arr = exploded["col"].to_numpy(np.int64).reshape(want.shape)
+        assert np.array_equal(got_arr, want), h

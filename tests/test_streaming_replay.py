@@ -142,3 +142,23 @@ def test_replay_cleans_up_tempdirs_and_sink(spark, events):
         if t.name.startswith("replay_")
     } - views_before
     assert leaked == set()
+
+
+def test_replay_hashes_64bit_user_ids_exactly(spark):
+    """Landmine 8: a nullable int64 column with a null in the Arrow batch
+    reaches pandas as float64, where ids above 2^53 that differ only in
+    their low bits collapse to one value.  Two such ids plus a null-user
+    event must count as three events and two distinct users."""
+    big = 1 << 60
+    events = spark.createDataFrame(
+        [
+            (0, "click", big + 1, 1.0),
+            (1, "click", big + 2, 2.0),
+            (2, "click", None, 4.0),
+        ],
+        "event_id long, event_type string, user_id long, value double",
+    )
+    (row,) = replay_events(spark, events, n_slices=1).collect()
+    assert row["n_events"] == 3
+    assert row["sum_value"] == 7.0
+    assert row["distinct_users"] == 2
