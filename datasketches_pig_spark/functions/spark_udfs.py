@@ -58,8 +58,12 @@ def murmur3_h1_long_expr(col: Column, seed: int = 9001, ordered: bool = False) -
     Python boundary (guide §4.1: prefer built-ins over UDFs).
 
     Java long arithmetic wraps mod 2^64 exactly like the C/numpy uint64
-    kernels; requires ``spark.sql.ansi.enabled=false`` (set by
-    ``session.get_spark``), otherwise a wrapping multiply raises.  With
+    kernels, but only under legacy arithmetic: Spark fixes each multiply's
+    and add's overflow mode when the DataFrame is BUILT, so build the
+    projection that holds this column while ``spark.sql.ansi.enabled`` is
+    false, otherwise a wrapping multiply raises at run time.
+    ``sketch.theta.theta_sketch_agg`` sets and restores the flag around its
+    projection itself; ``session.get_spark`` sessions have it off.  With
     ``ordered=True`` the sign bit is flipped so signed ordering equals
     unsigned hash ordering (the KMV/theta storage form).  Null in → null
     out (the reference's null-datum no-op rule; empty input cannot occur
@@ -109,13 +113,16 @@ def _hash_series(s: pd.Series, seed: int) -> tuple[np.ndarray, np.ndarray, np.nd
     return murmur3_bytes_batch(vals, seed)
 
 
-def murmur3_h1(col, seed: int = 9001) -> Column:
-    """Column UDF: first 64 bits of murmur3-128, as signed int64 (null for
-    null/empty input)."""
+def _h1_udf(seed: int, flip: bool):
+    """The one pandas-UDF body behind ``murmur3_h1`` (``flip=False``) and
+    ``murmur3_h1_ordered`` (``flip=True``), for the Column API and the SQL
+    registration alike."""
 
     @pandas_udf("long")
     def _udf(s: pd.Series) -> pd.Series:
         h1, _, valid = _hash_series(s, seed)
+        if flip:
+            h1 = h1 ^ SIGN_FLIP
         # nullable Int64, NOT None-into-int64 masking: pandas silently casts
         # an int64 column to float64 on None assignment, truncating hashes
         # below 2^53 precision for the whole batch
@@ -123,30 +130,15 @@ def murmur3_h1(col, seed: int = 9001) -> Column:
         out[~valid] = pd.NA
         return out
 
-    return _udf(col)
+    return _udf
 
 
-def murmur3_h1_ordered(col, seed: int = 9001) -> Column:
-    """Like murmur3_h1 but with the sign bit flipped, so signed int64 ordering
-    equals unsigned uint64 ordering — the representation the KMV/theta sketch
-    layer stores (bottom-k by unsigned hash via plain ORDER BY)."""
-
-    @pandas_udf("long")
-    def _udf(s: pd.Series) -> pd.Series:
-        h1, _, valid = _hash_series(s, seed)
-        out = pd.Series(pd.array((h1 ^ SIGN_FLIP).view(np.int64), dtype="Int64"))
-        out[~valid] = pd.NA
-        return out
-
-    return _udf(col)
-
-
-def murmur3_128(col, seed: int = 9001, divisor: int | None = None) -> Column:
-    """Full reference-parity UDF: (h0 long, h1 long, mod int) struct; ``mod``
-    is the unsigned 128-bit value modulo ``divisor`` (null if no divisor) —
-    the LSH band→bucket assignment primitive (``pig/hash/MurmurHash3.java:85-101``)."""
+def _h128_udf(seed: int, divisor: int | None):
+    """The one pandas-UDF body behind ``murmur3_128``: (h0, h1, mod) struct,
+    ``mod`` = the unsigned 128-bit value modulo ``divisor`` (null if none)."""
     if divisor is not None and not (0 < divisor <= 2**31 - 1):
-        # mod is a 32-bit struct field; larger divisors would fail per-batch
+        # mod is a 32-bit struct field; a larger divisor would make every
+        # batch raise at runtime, so refuse when the UDF is built
         raise ValueError(
             f"murmur3_128: divisor must be in (0, 2^31-1], got {divisor}"
         )
@@ -178,7 +170,27 @@ def murmur3_128(col, seed: int = 9001, divisor: int | None = None) -> Column:
             out["mod"] = pd.array([pd.NA] * len(out), dtype="Int32")
         return out
 
-    return _udf(col)
+    return _udf
+
+
+def murmur3_h1(col, seed: int = 9001) -> Column:
+    """Column UDF: first 64 bits of murmur3-128, as signed int64 (null for
+    null/empty input)."""
+    return _h1_udf(seed, flip=False)(col)
+
+
+def murmur3_h1_ordered(col, seed: int = 9001) -> Column:
+    """Like murmur3_h1 but with the sign bit flipped, so signed int64 ordering
+    equals unsigned uint64 ordering — the representation the KMV/theta sketch
+    layer stores (bottom-k by unsigned hash via plain ORDER BY)."""
+    return _h1_udf(seed, flip=True)(col)
+
+
+def murmur3_128(col, seed: int = 9001, divisor: int | None = None) -> Column:
+    """Full reference-parity UDF: (h0 long, h1 long, mod int) struct; ``mod``
+    is the unsigned 128-bit value modulo ``divisor`` (null if no divisor) —
+    the LSH band→bucket assignment primitive (``pig/hash/MurmurHash3.java:85-101``)."""
+    return _h128_udf(seed, divisor)(col)
 
 
 def register_sql_functions(
@@ -202,58 +214,15 @@ def register_sql_functions(
       128-bit value modulo ``divisor`` — the Pig UDF's bucket-assignment
       arg — or null when no divisor is bound)
 
-    Returns the registered names.
+    The registered objects are built by the same factories as the Column
+    API's UDFs.  Returns the registered names.
     """
-    if divisor is not None and not (0 < divisor <= 2**31 - 1):
-        # mod is declared int (32-bit) in the struct schema; a divisor above
-        # INT32_MAX would make every batch raise at runtime even though
-        # registration itself succeeds — validate here like the reference
-        # validates its ctor args at plan time
-        raise ValueError(
-            f"register_sql_functions: divisor must be in (0, 2^31-1], got {divisor}"
-        )
-
-    def _reg_h1(name: str, flip: bool):
-        @pandas_udf("long")
-        def _udf(s: pd.Series) -> pd.Series:
-            h1, _, valid = _hash_series(s, seed)
-            if flip:
-                h1 = h1 ^ SIGN_FLIP
-            out = pd.Series(pd.array(h1.view(np.int64), dtype="Int64"))
-            out[~valid] = pd.NA
-            return out
-
-        spark.udf.register(name, _udf)
-
-    _reg_h1(f"{prefix}murmur3_h1", flip=False)
-    _reg_h1(f"{prefix}murmur3_h1_ordered", flip=True)
-
-    @pandas_udf("struct<h0: long, h1: long, mod: int>")
-    def _udf128(s: pd.Series) -> pd.DataFrame:
-        h1, h2, valid = _hash_series(s, seed)
-        mod = np.zeros(len(s), dtype=np.int64)
-        if divisor:
-            mod = np.array(
-                [((int(b) << 64) | int(a)) % divisor for a, b in zip(h1, h2)],
-                dtype=np.int64,
-            )
-        out = pd.DataFrame(
-            {
-                "h0": pd.array(h1.view(np.int64), dtype="Int64"),
-                "h1": pd.array(h2.view(np.int64), dtype="Int64"),
-                "mod": pd.array(mod, dtype="Int32"),
-            }
-        )
-        out.loc[~valid, ["h0", "h1", "mod"]] = pd.NA
-        if not divisor:
-            # keep the Int32 extension dtype — a bare pd.NA assignment flips
-            # the column to object dtype and breaks Arrow conversion
-            out["mod"] = pd.array([pd.NA] * len(out), dtype="Int32")
-        return out
-
-    spark.udf.register(f"{prefix}murmur3_128", _udf128)
-    return [
-        f"{prefix}murmur3_h1",
-        f"{prefix}murmur3_h1_ordered",
-        f"{prefix}murmur3_128",
-    ]
+    h128 = _h128_udf(seed, divisor)  # validates divisor before registering
+    udfs = {
+        f"{prefix}murmur3_h1": _h1_udf(seed, flip=False),
+        f"{prefix}murmur3_h1_ordered": _h1_udf(seed, flip=True),
+        f"{prefix}murmur3_128": h128,
+    }
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)
+    return list(udfs)

@@ -33,7 +33,6 @@ from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.operators.shingle import normalize_text
 from datasketches_pig_spark.operators.signatures import kmv_jaccard_batch
 
-AUDIO_JACCARD_THRESHOLD = 0.5
 PREFILTER_HAMMING = 26  # of 64 bits; clear-negative cutoff, recall-safe
 
 # prefix-verify misroute probability per (pair, modality, bound side): a pair
@@ -42,12 +41,6 @@ PREFILTER_HAMMING = 26  # of 64 bits; clear-negative cutoff, recall-safe
 # a 10^9-candidate day processes with ~1 expected misroute, far inside the
 # recall ≥ 0.99 budget, and on the seeded test corpora parity is exact
 PREFIX_DELTA = 1e-9
-
-VERIFIED_SCHEMA = (
-    "a string, b string, text_jaccard double, audio_jaccard double, "
-    "text_hamming int, audio_hamming int, substr_ok boolean, is_dup boolean"
-)
-
 
 # ---------------------------------------------------------------------------
 # suffix-array longest-common-substring (transcript containment verifier)

@@ -40,9 +40,6 @@ from datasketches_pig_spark.operators.stages import signature_stage
 from datasketches_pig_spark.operators.unionfind import connected_components
 from datasketches_pig_spark.operators.verify import verify_pairs
 
-STAGES = ("signatures", "bands", "candidates", "verified", "clusters")
-
-
 @dataclass
 class RunResult:
     clusters: DataFrame

@@ -45,31 +45,6 @@ def frequent_items(
     return out.withColumn("lb", F.col("est")).withColumn("ub", F.col("est"))
 
 
-def _space_saving(items: pd.Series, max_map_size: int) -> dict[str, list]:
-    """Classic space-saving over one partition: counters + maxError."""
-    counters: dict[str, int] = {}
-    errors: dict[str, int] = {}
-    for it in items:
-        if it is None:
-            continue
-        if it in counters:
-            counters[it] += 1
-        elif len(counters) < max_map_size:
-            counters[it] = 1
-            errors[it] = 0
-        else:
-            victim = min(counters, key=counters.get)
-            verr = counters.pop(victim)
-            errors.pop(victim)
-            counters[it] = verr + 1
-            errors[it] = verr
-    return {
-        "item": list(counters),
-        "est": [counters[i] for i in counters],
-        "err": [errors[i] for i in counters],
-    }
-
-
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
 

@@ -17,8 +17,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-DEFAULT_KLL_K = 200  # kll/DataToSketch.java:39 default
-
 
 def kll_to_string(df: DataFrame, value_col: str, k: int = 200) -> DataFrame:
     """Debug summary — ``kll/SketchToString.java`` analog: k / n / min / max
@@ -39,14 +37,6 @@ def kll_to_string(df: DataFrame, value_col: str, k: int = 200) -> DataFrame:
             F.round(F.max(value_col), 4).cast("string"),
         ).alias("summary")
     )
-
-
-def get_k(accuracy_k: int | None = None) -> int:
-    """KLL k readback (``kll/GetK.java:35``).  The relational engine carries
-    no sketch object at runtime — k is the ``percentile_approx`` accuracy
-    parameter the caller configured — so this is a config readback, kept for
-    reference API parity."""
-    return DEFAULT_KLL_K if accuracy_k is None else accuracy_k
 
 
 def _check_splits(op: str, split_points: list[float]) -> None:

@@ -124,10 +124,20 @@ def theta_sketch_agg(
         # prefilter replaces the former dropna on the UDF output: it pushes
         # to the scan (PushedFilters) instead of duplicating hash evaluation
         # around a post-hoc filter (guide §4.4's duplicated-UDF pattern).
-        hashed = df.where(F.col(value_col).isNotNull()).select(
-            *group_cols,
-            murmur3_h1_long_expr(F.col(value_col), seed, ordered=True).alias("__h"),
-        )
+        # The hash needs wrap-around long arithmetic, and Spark fixes each
+        # multiply/add's overflow mode when the DataFrame is built, so build
+        # the projection under legacy arithmetic whatever the caller's ANSI
+        # setting, and restore that setting after.
+        conf = df.sparkSession.conf
+        ansi = conf.get("spark.sql.ansi.enabled")
+        conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            h = murmur3_h1_long_expr(F.col(value_col), seed, ordered=True)
+            hashed = df.where(F.col(value_col).isNotNull()).select(
+                *group_cols, h.alias("__h")
+            )
+        finally:
+            conf.set("spark.sql.ansi.enabled", ansi)
     else:
         hashed = df.select(
             *group_cols, murmur3_h1_ordered(F.col(value_col), seed).alias("__h")

@@ -185,11 +185,6 @@ def double_summary_sketch(
     )
 
 
-def double_summary_estimates(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """(unique-key estimate, total sum) — ``DoubleSummarySketchToEstimates.java:45``."""
-    return aod_estimates(df, key_col, [value_col])
-
-
 def double_summary_percentile(
     df: DataFrame, key_col: str, value_col: str, pct: float
 ) -> DataFrame:

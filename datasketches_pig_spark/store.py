@@ -56,27 +56,3 @@ def load_signatures_bucketed(spark: SparkSession, table: str) -> DataFrame:
     parquet path read — a path read would discard the bucket spec and
     reintroduce the shuffle)."""
     return spark.table(table)
-
-
-def verify_against_store(
-    pairs: DataFrame,
-    stored_signatures: DataFrame,
-    cfg,
-    transcripts: DataFrame | None = None,
-) -> DataFrame:
-    """Verify candidate pairs against a bucketed signature store.
-
-    Thin wrapper over ``operators.verify.verify_pairs`` — the co-location is
-    a property of the input, not the operator: because ``stored_signatures``
-    carries bucket metadata on clip_id, Catalyst plans both signature joins
-    without an Exchange on the stored side.
-    """
-    from datasketches_pig_spark.operators.verify import verify_pairs
-
-    # verify_pairs' size gate counts `pairs` eagerly; the pipeline callers
-    # pass a checkpointed frame, but this entry point takes an arbitrary
-    # candidate chain — materialize it here so the gate's count doesn't
-    # execute the whole chain a second time
-    if cfg.verify_prefix is not None and cfg.verify_prefix_min_pairs:
-        pairs = pairs.localCheckpoint(eager=True)
-    return verify_pairs(pairs, stored_signatures, cfg, transcripts=transcripts)

@@ -174,9 +174,4 @@ def doc_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 }
             )
 
-    from datasketches_pig_spark.textops.dedup import _spread_scan
-
-    # a one-file test corpus otherwise runs the whole Arrow pass in 1 task
-    return _spread_scan(df.select(id_col, text_col)).mapInPandas(
-        run, schema=FP_SCHEMA
-    )
+    return df.select(id_col, text_col).mapInPandas(run, schema=FP_SCHEMA)

@@ -42,16 +42,6 @@ def tokens_expr(text_col: str):
     return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
 
 
-def _spread_scan(df: DataFrame) -> DataFrame:
-    """Round-robin the input across the session's cores when the scan has
-    fewer partitions (guide §2.5 input skew: a bench/test corpus is one
-    small parquet file = ONE task, which serializes the whole Arrow
-    signature pass behind a single core).  At production scale the scan has
-    ≥ cores splits and this is a no-op — no extra exchange."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
-
-
 def word_ngrams(
     df: DataFrame,
     id_col: str,
@@ -252,9 +242,7 @@ def minhash_stage(
                 }
             )
 
-    return _spread_scan(df.select(id_col, text_col)).mapInPandas(
-        run, schema=MINHASH_SCHEMA
-    )
+    return df.select(id_col, text_col).mapInPandas(run, schema=MINHASH_SCHEMA)
 
 
 def minhash_lsh_candidates(sigs: DataFrame, cap: int = 64) -> DataFrame:
@@ -769,7 +757,7 @@ def simhash_near_pairs(
 
     release_shard_caches()  # previous operator's expansion cache, if any
     sigs = (
-        _spread_scan(df.select(id_col, text_col))
+        df.select(id_col, text_col)
         .mapInPandas(
             run, "id long, simhash long, n_shingles int, ckeys array<long>"
         )

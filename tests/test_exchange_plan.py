@@ -3,11 +3,16 @@ the LSH/near-pair operators pin no ``repartition(n, keys)`` width, so every
 (a, b) aggregation keeps its map-side partial aggregate below its exchange
 (a pin moves the partial aggregate above the exchange, shuffling every raw
 pair).  Asserted on the executed plan of the pipeline's candidates frame and
-of the MJPEG gate query (a ``bucket_pairs`` caller via ``video_near_pairs``)."""
+of the MJPEG gate query (a ``bucket_pairs`` caller via ``video_near_pairs``).
+
+The doc Arrow passes (fingerprint, minhash, simhash) add no exchange on their
+input either: they read the documents table as the scan splits it."""
 
 import re
 
+import pytest
 from conftest import SF_DIR
+from pyspark.sql import DataFrame
 
 from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.data.clips import generate_clips_pandas
@@ -47,11 +52,14 @@ def _assert_pair_exchange_shape(plan: str) -> None:
     assert found, plan
 
 
-def test_pipeline_candidates_keep_partial_distinct(spark, monkeypatch):
-    clips_pdf, _, _ = generate_clips_pandas(20, seed=5)
-    clips = spark.createDataFrame(clips_pdf)
+def _executed_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _record_checkpoints(spark, monkeypatch) -> list[DataFrame]:
+    """Collect every frame ``localCheckpoint`` materializes from here on."""
     checkpointed = []
-    cls = type(clips)
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
     original = cls.localCheckpoint
 
     def recording(self, *args, **kwargs):
@@ -59,13 +67,18 @@ def test_pipeline_candidates_keep_partial_distinct(spark, monkeypatch):
         return original(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", recording)
+    return checkpointed
+
+
+def test_pipeline_candidates_keep_partial_distinct(spark, monkeypatch):
+    clips_pdf, _, _ = generate_clips_pandas(20, seed=5)
+    clips = spark.createDataFrame(clips_pdf)
+    checkpointed = _record_checkpoints(spark, monkeypatch)
     run_pipeline(spark, clips, DedupConfig())
     monkeypatch.undo()
     # the candidates stage is the first checkpointed (a, b) frame
     candidates = next(df for df in checkpointed if df.columns == ["a", "b"])
-    _assert_pair_exchange_shape(
-        candidates._jdf.queryExecution().executedPlan().toString()
-    )
+    _assert_pair_exchange_shape(_executed_plan(candidates))
 
 
 def test_video_gate_keeps_partial_pair_count(spark):
@@ -73,4 +86,28 @@ def test_video_gate_keeps_partial_pair_count(spark):
 
     out = q_dedup_mjpeg(spark, SF_DIR)
     assert out.collect()
-    _assert_pair_exchange_shape(out._jdf.queryExecution().executedPlan().toString())
+    _assert_pair_exchange_shape(_executed_plan(out))
+
+
+@pytest.mark.parametrize("op", ["fingerprint", "minhash", "simhash"])
+def test_doc_arrow_passes_read_the_scan_as_split(spark, monkeypatch, op):
+    """The doc Arrow passes take their input as the scan splits it: no
+    round-robin exchange in front of the kernel, even when the documents
+    table is one single-row-group file (one task).  Checked on the output
+    and on every frame the operator checkpoints on the way."""
+    from datasketches_pig_spark.queries import q_fingerprint
+    from datasketches_pig_spark.textops.dedup import minhash_stage, simhash_near_pairs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    build = {
+        "fingerprint": lambda: q_fingerprint(spark, SF_DIR),
+        "minhash": lambda: minhash_stage(docs, "doc_id", "text"),
+        "simhash": lambda: simhash_near_pairs(docs, "doc_id", "text"),
+    }[op]
+    checkpointed = _record_checkpoints(spark, monkeypatch)
+    out = build()
+    out.collect()
+    monkeypatch.undo()
+    for df in (out, *checkpointed):
+        plan = _executed_plan(df)
+        assert "RoundRobinPartitioning" not in plan, plan

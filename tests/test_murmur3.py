@@ -270,6 +270,47 @@ def test_jvm_long_expr_parity(spark):
     assert nulls[0]["h"] is not None and nulls[1]["h"] is None
 
 
+THETA_QUERIES = (
+    "theta_distinct",
+    "theta_union",
+    "theta_intersect",
+    "theta_anotb",
+    "theta_jaccard",
+    "theta_bounds",
+    "sketch_summaries",
+    "theta_p",
+    "theta_jaccard_bounds",
+    "theta_to_string",
+)
+
+
+def test_theta_queries_match_in_ansi_session(spark):
+    """The theta queries hash integral keys with wrap-around long algebra.
+    In a caller's vanilla session (ANSI on, partition coalescing on, default
+    shuffle width) they must give the same values as in ``get_spark``'s
+    session rather than raise ARITHMETIC_OVERFLOW, and must leave that
+    session's ANSI setting as they found it."""
+    from conftest import SF_DIR
+    from tools.check_oracle import value_hash
+
+    from datasketches_pig_spark.queries import registry
+
+    vanilla = spark.newSession()
+    vanilla.conf.set("spark.sql.ansi.enabled", "true")
+    vanilla.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    vanilla.conf.unset("spark.sql.shuffle.partitions")
+    assert vanilla.conf.get("spark.sql.shuffle.partitions") == "200"
+
+    reg = registry()
+    for name in THETA_QUERIES:
+        hashes = []
+        for session in (spark, vanilla):
+            df = reg[name][0](session, SF_DIR)
+            hashes.append(value_hash(df.columns, [tuple(r) for r in df.collect()]))
+        assert hashes[0] == hashes[1], name
+    assert vanilla.conf.get("spark.sql.ansi.enabled") == "true"
+
+
 def test_two_level_bottom_k_single_window_parity(spark):
     """The r8 single-exchange bottom-k (dense_rank + lag dedup in one window
     pass) must equal a brute-force distinct-sort-slice per group, on a

@@ -45,7 +45,7 @@ def test_bucketed_join_no_exchange_on_stored_side(spark, sig_store):
     assert "SelectedBucketsCount" in plan, plan
 
 
-def test_verify_against_store_matches_in_job_path(spark, sig_store):
+def test_verify_pairs_on_bucketed_store_matches_in_job_path(spark, sig_store):
     clips, cfg, sigs = sig_store
     stored = load_signatures_bucketed(spark, "sig_store_test")
 
