@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -38,25 +38,6 @@ class DedupConfig:
     weak_support_threshold: float = 0.25  # … the other above the noise floor
                                      # (negatives ≤ ~0.13/0.20 exact; ≥4σ of
                                      # KMV estimation noise below this bar)
-    simhash_max_hamming: int = 12    # SimHash prefilter (of 64 bits)
-    verify_prefix: int | None = 64   # prefix-KMV verify: tier-1 ships only
-                                     # the first `verify_prefix` sketch
-                                     # hashes; pairs whose KL confidence
-                                     # bounds cannot certify the composite
-                                     # rule fetch the full sketch (None =
-                                     # single-tier full-sketch verify)
-    verify_prefix_min_pairs: int = 500_000
-                                     # size-adaptive gate (r6): below this
-                                     # many candidate pairs the prefix
-                                     # tier's fixed plan/codegen cost
-                                     # exceeds the shuffle bytes it saves
-                                     # (measured: +2.5 s at ~100 k pairs,
-                                     # −6-10 s at 1.8 M), so verify drops
-                                     # to the single-tier path — decisions
-                                     # are parity-identical by the r5
-                                     # bound construction. 0 disables the
-                                     # gate (tier follows verify_prefix
-                                     # unconditionally)
     max_verify_chars: int = 65536    # containment-verify payload cap
                                      # (normalized chars): pairs whose
                                      # longer transcript exceeds this skip
@@ -66,9 +47,7 @@ class DedupConfig:
                                      # the verify stage is then O(cap log²
                                      # cap), so an hour-long-episode
                                      # corpus can't stall verify tasks
-    snr_db: float = 30.0             # decoded-PCM invariant bar
     max_bucket_size: int = 64        # LSH bucket cap before salting/split
-    verify_max_shingles: int = 8192  # cap on shingle-set size shipped to verify
 
     # --- clustering ---
     max_unionfind_rounds: int = 50
@@ -87,16 +66,6 @@ class DedupConfig:
             raise ValueError("jaccard_threshold must be in (0, 1]")
         if self.shingle_k_text < 1 or self.shingle_k_audio < 1:
             raise ValueError("shingle sizes must be >= 1")
-        if self.verify_prefix is not None and not (
-            16 <= self.verify_prefix < self.kmv_k
-        ):
-            raise ValueError(
-                f"verify_prefix must be None or in [16, kmv_k) — a prefix of "
-                f"{self.verify_prefix} against kmv_k={self.kmv_k} is either "
-                "too noisy to bound or not a prefix at all"
-            )
-        if self.verify_prefix_min_pairs < 0:
-            raise ValueError("verify_prefix_min_pairs must be >= 0")
         if self.max_verify_chars < 4096:
             # below ~4k the chunk-probe relaxation's slack term
             # (2·chunk/len) stops being small against min_frac

@@ -23,7 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from datasketches_pig_spark.config import DedupConfig
+from datasketches_pig_spark.config import DEFAULT_CONFIG, DedupConfig
 
 
 DRIVER_DSU_MAX_EDGES = 5_000_000  # ~100 MB driver footprint
@@ -33,7 +33,6 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
     cfg: DedupConfig | None = None,
-    max_driver_edges: int = DRIVER_DSU_MAX_EDGES,
 ) -> DataFrame:
     """edges(a, b) + vertices(clip_id) → clusters(clip_id, cluster_id).
 
@@ -42,15 +41,17 @@ def connected_components(
     driver-side union-find (numpy DSU, milliseconds) replaces the iterative
     join loop; above it, distributed min-label propagation runs to a fixpoint.
     Vertices not touched by any edge become singleton clusters either way.
+    The threshold is read at call time, so tests can set it.
     """
-    max_rounds = cfg.max_unionfind_rounds if cfg else 50
+    max_rounds = (cfg or DEFAULT_CONFIG).max_unionfind_rounds
+    cap = DRIVER_DSU_MAX_EDGES
 
     # size probe and edge fetch in ONE job: pull at most cap+1 rows — if the
     # limit was not hit, these rows ARE the full edge set and the driver DSU
     # runs on them directly (a separate count() probe would pay a second
     # scheduling round-trip for exactly the same scan)
-    head = edges.select("a", "b").limit(max_driver_edges + 1).toPandas()
-    if len(head) <= max_driver_edges:
+    head = edges.select("a", "b").limit(cap + 1).toPandas()
+    if len(head) <= cap:
         return _driver_dsu(head, vertices)
 
     sym = (

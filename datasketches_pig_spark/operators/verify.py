@@ -42,6 +42,11 @@ PREFILTER_HAMMING = 26  # of 64 bits; clear-negative cutoff, recall-safe
 # recall ≥ 0.99 budget, and on the seeded test corpora parity is exact
 PREFIX_DELTA = 1e-9
 
+# prefix-KMV tier (see verify_pairs): sketch hashes shipped per side, and the
+# candidate-pair count below which verify runs the single tier (0 = no gate)
+PREFIX_HASHES = 64
+PREFIX_MIN_PAIRS = 500_000
+
 # ---------------------------------------------------------------------------
 # suffix-array longest-common-substring (transcript containment verifier)
 # ---------------------------------------------------------------------------
@@ -327,8 +332,7 @@ def _score_full(
 
 def _finish_scored(
     scored: DataFrame,
-    signatures: DataFrame,
-    transcripts: DataFrame | None,
+    transcripts: DataFrame,
     near: float,
     weak: float,
     text_thr: float,
@@ -343,21 +347,8 @@ def _finish_scored(
         & (F.col("text_jaccard") >= 0.05)
         & (F.col("text_jaccard") < text_thr)
     )
-    if transcripts is None and "transcript" not in signatures.columns:
-        # signatures no longer carry transcripts (SIGNATURE_SCHEMA dropped the
-        # column); without a transcript source the substring-containment
-        # branch is skipped and borderline pairs are decided on jaccard alone
-        tsrc = None
-    else:
-        tsrc = transcripts if transcripts is not None else signatures
-    if tsrc is None:
-        border_scored = scored.filter(is_border).withColumn(
-            "substr_ok", F.lit(False)
-        )
-        plain_scored = scored.filter(~is_border).withColumn("substr_ok", F.lit(False))
-        return plain_scored, border_scored
-    ta = tsrc.select(F.col("clip_id").alias("a"), F.col("transcript").alias("a_transcript"))
-    tb = tsrc.select(F.col("clip_id").alias("b"), F.col("transcript").alias("b_transcript"))
+    ta = transcripts.select(F.col("clip_id").alias("a"), F.col("transcript").alias("a_transcript"))
+    tb = transcripts.select(F.col("clip_id").alias("b"), F.col("transcript").alias("b_transcript"))
     # left joins: a candidate whose clip_id is missing from the transcript
     # source must still flow through the is_dup decision (with the
     # containment check unavailable → substr_ok False), not vanish
@@ -467,7 +458,7 @@ def verify_pairs(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
-    transcripts: DataFrame | None = None,
+    transcripts: DataFrame,
     n_signatures: int | None = None,
 ) -> DataFrame:
     """candidate (a, b) pairs + signatures → verified pairs with scores.
@@ -491,37 +482,37 @@ def verify_pairs(
        each full KMV sketch.  Clear negatives and byte-identical pairs never
        ship a sketch; pairs whose BOTH sketch digests match are accepted
        outright (identical sketches ⇒ both estimates are exactly 1.0).
-    2. **Prefix-KMV verify (pure JVM since r6, ``cfg.verify_prefix``
-       hashes/side — default 64 of kmv_k=256, a 4× cut in the dominant
-       shuffle bytes)** — the prefix hit count is a without-replacement
-       sample of the indicators the full estimate averages, so Chernoff-KL
-       bounds at ``PREFIX_DELTA`` certify clear accepts/rejects of the
-       composite rule against the FULL-sketch decision.  The bounds are
-       precomputed into per-denom integer hit thresholds
-       (``prefix_hit_thresholds``) and the hit count is bracketed from set
-       sizes alone (``_prefix_stat_cols``), so the whole tier is
-       whole-stage-codegen column algebra — no Arrow boundary, no sort;
-       rows where the prefix is provably the whole answer (complete sets,
-       identical sketches, empty sides) are decided on their exact
+    2. **Prefix-KMV verify (pure JVM since r6, ``PREFIX_HASHES``
+       hashes/side — 64 of the default kmv_k=256, a 4× cut in the dominant
+       shuffle bytes; runs only with ``PREFIX_MIN_PAIRS`` or more candidate
+       pairs and ``PREFIX_HASHES < kmv_k``)** — the prefix hit count is a
+       without-replacement sample of the indicators the full estimate
+       averages, so Chernoff-KL bounds at ``PREFIX_DELTA`` certify clear
+       accepts/rejects of the composite rule against the FULL-sketch
+       decision. The bounds are precomputed into per-denom integer hit
+       thresholds (``prefix_hit_thresholds``) and the hit count is
+       bracketed from set sizes alone (``_prefix_stat_cols``), so the whole
+       tier is whole-stage-codegen column algebra — no Arrow boundary, no
+       sort; rows where the prefix is provably the whole answer (complete
+       sets, identical sketches, empty sides) are decided on their exact
        estimate.
     3. **Full-sketch verify + suffix-array containment** — only the pairs
        the bounds could not certify (near-threshold scores) fetch the full
        ~2 KB/side sketches, and of those only the borderline band joins a
        transcript.
 
-    ``cfg.verify_prefix = None`` collapses to the single-tier full-sketch
-    verify (tier 3 for every surviving pair) — the parity baseline.
+    When tier 2 does not run, verify is single-tier: tier 3 for every
+    surviving pair — the parity baseline.
 
     Score-column contract: ``is_dup`` (and the pair set it induces) is
-    identical across ``verify_prefix`` settings — that is what the parity
-    test pins.  ``text_jaccard``/``audio_jaccard`` magnitudes are NOT:
-    on tier-1-decided rows they are the *prefix-set* point estimates
+    identical on both routes — that is what the parity test pins.
+    ``text_jaccard``/``audio_jaccard`` magnitudes are NOT: on
+    tier-1-decided rows they are the *prefix-set* point estimates
     (inter/union, exact whenever the prefix union is untruncated), while
-    the ``None`` baseline reports full-sketch estimates.
-    Decisions are authoritative; do not diff jaccard magnitudes across
-    ``verify_prefix`` configurations.
+    the single tier reports full-sketch estimates.  Decisions are
+    authoritative; do not diff jaccard magnitudes across routes.
     """
-    if transcripts is not None and "transcript" not in transcripts.columns:
+    if "transcript" not in transcripts.columns:
         raise ValueError(
             "verify_pairs: transcripts frame must have a 'transcript' column; "
             f"got {transcripts.columns}"
@@ -530,7 +521,6 @@ def verify_pairs(
     text_thr = cfg.jaccard_threshold
     near = cfg.near_exact_threshold
     weak = cfg.weak_support_threshold
-    prefix = cfg.verify_prefix
     # size-adaptive gate (r6): the prefix tier trades ~4 KB/pair of shuffle
     # for a bigger plan (extra join + two localCheckpoint barriers + wider
     # codegen).  Below ~half a million candidate pairs the fixed cost wins
@@ -539,9 +529,11 @@ def verify_pairs(
     # 6–10 s of an 8-core verify).  Callers pass `pairs` materialized (the
     # pipeline checkpoints the candidates stage), so the count is a cached
     # scan, and decisions are parity-identical either way by construction.
-    if prefix is not None and cfg.verify_prefix_min_pairs:
-        if pairs.count() < cfg.verify_prefix_min_pairs:
-            prefix = None
+    # The constants are read at call time so tests and tools can set them.
+    prefix = PREFIX_HASHES
+    tiered = prefix < kmv_k and (
+        PREFIX_MIN_PAIRS == 0 or pairs.count() >= PREFIX_MIN_PAIRS
+    )
 
     def _passthrough(df: DataFrame, dup_col) -> DataFrame:
         return df.select(
@@ -609,7 +601,7 @@ def verify_pairs(
         .select("a", "b", *slim_exprs)
     )
 
-    if prefix is None:
+    if not tiered:
         passthrough = _passthrough(joined.filter(~needs), F.col("exact"))
         scored = _score_full(
             joined.filter(needs).select("a", "b", "text_hamming", "audio_hamming"),
@@ -618,7 +610,7 @@ def verify_pairs(
             bcast=bcast,
         )
         plain_scored, border_scored = _finish_scored(
-            scored, signatures, transcripts, near, weak, text_thr,
+            scored, transcripts, near, weak, text_thr,
             max_verify_chars=cfg.max_verify_chars,
         )
         return _decide(passthrough, plain_scored, border_scored, near, weak, text_thr)
@@ -634,7 +626,7 @@ def verify_pairs(
     # set math, in the SAME emit as the prefilter passthrough.  dup
     # condition is exact | (needs & both_eq), NOT exact | both_eq: a pair
     # with identical bottom-k sketches but SimHash Hamming past the
-    # prefilter bar was (and in the prefix=None baseline still is) a
+    # prefilter bar was (and in the single-tier baseline still is) a
     # prefilter reject — the parity contract decides it False
     both_eq = F.col("text_eq") & F.col("audio_eq")
     passthrough = _passthrough(
@@ -652,7 +644,7 @@ def verify_pairs(
     # same certified routing in ~5 s with zero Python.  Pairs whose
     # bracketed hit count cannot certify either way fall through to tier
     # 2's exact full-sketch verify, so final decisions keep pair-for-pair
-    # parity with the verify_prefix=None baseline.
+    # parity with the single-tier baseline.
     tables = prefix_hit_thresholds(
         prefix, PREFIX_DELTA, (near, weak, text_thr, 0.6)
     )
@@ -758,7 +750,7 @@ def verify_pairs(
     ).select("a", "b", "text_hamming", "audio_hamming")
     scored = _score_full(borderline, signatures, kmv_k, bcast=bcast)
     plain_scored, border_scored = _finish_scored(
-        scored, signatures, transcripts, near, weak, text_thr,
+        scored, transcripts, near, weak, text_thr,
         max_verify_chars=cfg.max_verify_chars,
     )
     decided = _decide(
@@ -776,7 +768,7 @@ def _decide(
     text_thr: float,
 ) -> DataFrame:
     """Composite accept rule over the scored pairs (substr_ok is always False
-    on the plain branch and when no transcript source is available)."""
+    on the plain branch)."""
     decided = plain_scored.unionByName(border_scored).withColumn(
         "is_dup",
         ((F.col("text_jaccard") >= near) & (F.col("audio_jaccard") >= weak))

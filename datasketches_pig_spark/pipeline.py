@@ -132,7 +132,7 @@ def run_pipeline(
             entry = {"stage": name, "resumed": False, "config": cfg.config_hash()}
             if store:
                 df = store.save(name, df, entry)
-                entry["rows_out"] = df.count()
+                entry["rows_out"] = sum(entry["partition_rows"].values())
                 entry["partitions"] = df.rdd.getNumPartitions()
             elif materialize:
                 df = df.localCheckpoint()

@@ -271,6 +271,11 @@ _PREFIX_REJECT_DELTA = 1e-12  # per-pair misroute probability of the KL reject
 
 _PROBE_ROWS = 20_000
 
+# text prefix screen (see minhash_dedup_pairs): bottom-p KMV width, and the
+# probed mean shingle count below which the screen is skipped (0 = no gate)
+PREFIX_SCREEN_HASHES = 128
+PREFIX_SCREEN_MIN_MEAN_SHINGLES = 4 * PREFIX_SCREEN_HASHES
+
 
 def _estimate_mean_shingles(
     df: DataFrame, text_col: str, n: int, char_fallback_n: int | None
@@ -301,8 +306,6 @@ def minhash_dedup_pairs(
     num_perm: int = 128,
     seed: int = 9001,
     char_fallback_n: int | None = 5,
-    prefix_verify: int | None = 128,
-    prefix_min_mean_shingles: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidates, exact-verified by a shingle join restricted to
     candidates (the scale path: quadratic work only inside LSH buckets).
@@ -317,9 +320,9 @@ def minhash_dedup_pairs(
     verify (``word_ngrams`` applies the same fallback), so their Jaccard is
     char-gram Jaccard and their near-dups are found like everyone else's.
 
-    **Prefix verify (r5, ``prefix_verify`` = the stage's bottom-p KMV
-    width):** before any shingle materializes, candidate pairs pass through
-    two cheap screens —
+    **Prefix verify (r5, p = ``PREFIX_SCREEN_HASHES``, the stage's
+    bottom-p KMV width):** before any shingle materializes, candidate
+    pairs pass through two cheap screens —
 
     1. size-ratio (JVM, 4 B/side): J ≤ min(|A|,|B|)/max(|A|,|B|) with the
        EXACT distinct-gram counts from the signature pass — a deterministic
@@ -333,8 +336,9 @@ def minhash_dedup_pairs(
 
     Only the surviving uncertain pairs — near-threshold, large-doc — reach
     the gram join, so the O(|doc| · pairs) shingle shuffle shrinks to the
-    pairs that genuinely need it.  ``prefix_verify=None`` restores the
-    join-everything baseline (the parity reference).
+    pairs that genuinely need it.  Without the screen every candidate
+    reaches the gram join: the join-everything baseline (the parity
+    reference).
 
     **Why p = 128 (r6):** the KL reject can only fire when the prefix
     estimate sits below ``ub⁻¹(τ)`` — at δ = 1e-12 that cut is est ≲ 0.37
@@ -359,32 +363,27 @@ def minhash_dedup_pairs(
     when the gram join it displaces is expensive, i.e. when docs are long.
     Measured on the 1.6 M-doc short-doc scaling corpus (~80 shingles/doc,
     8 cores): screen ON 93.0–93.1 s vs OFF 82.6–88.1 s at identical output.
-    So when ``prefix_min_mean_shingles`` > 0, a bounded probe (first
-    ``_PROBE_ROWS`` rows, pure JVM column algebra on the raw table)
-    estimates the mean shingle count and the screen auto-disables below
-    the bar (default ``4 * prefix_verify``).  The decision affects the
-    physical plan only — both routes produce identical pairs (parity test
-    ``test_minhash_prefix_verify_parity``); pass
-    ``prefix_min_mean_shingles=0`` to force the screen regardless."""
+    So unless ``PREFIX_SCREEN_MIN_MEAN_SHINGLES`` (4·p) is 0, a bounded
+    probe (first ``_PROBE_ROWS`` rows, pure JVM column algebra on the raw
+    table) estimates the mean shingle count and the screen auto-disables
+    below that bar.  The decision affects the physical plan only — both
+    routes produce identical pairs (parity test
+    ``test_minhash_prefix_verify_parity``).  Both constants are read at
+    call time, so tests and tools can set them."""
     from datasketches_pig_spark.operators.lsh import release_shard_caches
 
-    if prefix_verify is not None:
-        min_mean = (
-            4 * prefix_verify
-            if prefix_min_mean_shingles is None
-            else prefix_min_mean_shingles
-        )
-        if min_mean and (
-            _estimate_mean_shingles(df, text_col, n, char_fallback_n) < min_mean
-        ):
-            prefix_verify = None
+    p = PREFIX_SCREEN_HASHES
+    min_mean = PREFIX_SCREEN_MIN_MEAN_SHINGLES
+    screen = not min_mean or (
+        _estimate_mean_shingles(df, text_col, n, char_fallback_n) >= min_mean
+    )
 
     sigs = minhash_stage(
         df, id_col, text_col, n, num_perm, seed, char_fallback_n,
-        kmv_prefix=prefix_verify or 64,
+        kmv_prefix=p if screen else 64,
     )
     exact_prefix = None
-    if prefix_verify is not None:
+    if screen:
         # two consumers (candidates + prefilter joins): materialize the slim
         # signature rows once so the Arrow shingle pass runs exactly once.
         # The candidate frame itself stays LAZY — its single consumer is the
@@ -392,7 +391,7 @@ def minhash_dedup_pairs(
         # one job (one fewer barrier than checkpointing candidates first)
         sigs = sigs.localCheckpoint()
         cands = minhash_lsh_candidates(sigs)
-        cands, exact_prefix = _prefix_screen(cands, sigs, threshold, prefix_verify)
+        cands, exact_prefix = _prefix_screen(cands, sigs, threshold, p)
         release_shard_caches()  # screen is materialized; drop the shard cache
     else:
         cands = minhash_lsh_candidates(sigs).localCheckpoint()

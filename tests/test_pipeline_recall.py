@@ -160,8 +160,11 @@ def test_manifest_carries_partition_lineage_and_metrics(spark, tmp_run_dir):
     assert bm["buckets_over_salting_cap"] >= 0
     assert bm["max_bucket_size_cap"] == DedupConfig().max_bucket_size
 
-    # the in-memory lineage carries the same records
+    # the in-memory lineage carries the same records, and each stage's
+    # rows_out is its partition rows' sum
     by_stage = {e["stage"]: e for e in res.lineage}
+    for e in res.lineage:
+        assert e["rows_out"] == sum(e["partition_rows"].values()), e["stage"]
     assert by_stage["signatures"]["signature_metrics"] == sm
     assert by_stage["candidates"]["band_metrics"] == bm
 

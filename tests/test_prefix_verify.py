@@ -2,7 +2,7 @@
 bottom-k sketch plus 8-byte sketch digests; Chernoff-KL bounds certify clear
 accepts/rejects of the composite rule, and only uncertifiable pairs fetch
 full sketches.  Contract: pair-decision parity with the single-tier
-full-sketch verify (``verify_prefix=None``) on the planted corpus."""
+full-sketch verify on the planted corpus."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -10,6 +10,7 @@ import pytest
 
 from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.data.clips import generate_clips_pandas
+from datasketches_pig_spark.operators import verify as V
 from datasketches_pig_spark.operators.verify import (
     PREFIX_DELTA,
     binomial_kl_bounds,
@@ -75,19 +76,19 @@ def _decisions(result):
     }
 
 
-def test_prefix_vs_full_parity(spark, parity_corpus):
+def test_prefix_vs_full_parity(spark, parity_corpus, monkeypatch):
     """Same candidate pairs, same decisions: the tiered prefix verify must
     reproduce the single-tier full-sketch verify pair-for-pair (scores on
     tier-1-decided pairs are prefix estimates by contract; is_dup is what
     clustering consumes and must match)."""
     clips, truth_pairs = parity_corpus
-    # verify_prefix_min_pairs=0 disables the r6 size gate: this small corpus
-    # would otherwise route BOTH runs through the single-tier baseline and
-    # the parity assertion would compare the baseline with itself
-    res_prefix = run_pipeline(
-        spark, clips, DedupConfig(verify_prefix_min_pairs=0)
-    )  # verify_prefix=64, tier forced
-    res_full = run_pipeline(spark, clips, DedupConfig(verify_prefix=None))
+    # this small corpus sits below the r6 size gate, so the default run is
+    # the single-tier baseline; PREFIX_MIN_PAIRS=0 forces the tier
+    res_full = run_pipeline(spark, clips, DedupConfig())
+    n_cands = {e["stage"]: e for e in res_full.lineage}["candidates"]["rows_out"]
+    assert n_cands < V.PREFIX_MIN_PAIRS
+    monkeypatch.setattr(V, "PREFIX_MIN_PAIRS", 0)
+    res_prefix = run_pipeline(spark, clips, DedupConfig())
 
     d_p = _decisions(res_prefix)
     d_f = _decisions(res_full)
@@ -109,7 +110,7 @@ def test_prefix_vs_full_parity(spark, parity_corpus):
     assert co / len(truth) >= 0.99
 
 
-def test_prefix_tier2_is_minority(spark, parity_corpus):
+def test_prefix_tier2_is_minority(spark, parity_corpus, monkeypatch):
     """The point of the tiers: most surviving pairs must be decided from the
     prefix (bounded payload), leaving only a minority to fetch full
     sketches.  Measured through the verify internals on the real candidate
@@ -119,12 +120,12 @@ def test_prefix_tier2_is_minority(spark, parity_corpus):
     from datasketches_pig_spark.pipeline import run_pipeline as _rp  # noqa: F401
 
     clips, _ = parity_corpus
-    cfg = DedupConfig(verify_prefix_min_pairs=0)  # force the tier (r6 gate)
+    cfg = DedupConfig()
+    monkeypatch.setattr(V, "PREFIX_MIN_PAIRS", 0)  # force the tier (r6 gate)
     from datasketches_pig_spark.incremental import all_bands
 
     sigs = signature_stage(clips, cfg).localCheckpoint()
     cands = candidate_pairs(all_bands(sigs, cfg), cfg).distinct().localCheckpoint()
-    from datasketches_pig_spark.operators import verify as V
 
     captured = {}
     orig = V._score_full
@@ -145,13 +146,14 @@ def test_prefix_tier2_is_minority(spark, parity_corpus):
     )
 
 
-def test_prefix_size_gate_picks_single_tier_on_small_input(spark, parity_corpus):
-    """r6 size-adaptive gate: below verify_prefix_min_pairs candidate pairs
-    the verify must collapse to the single-tier path (every surviving pair
-    goes through _score_full) even with verify_prefix set — and the result
-    must equal the forced-tier run (parity is the gate's license)."""
+def test_prefix_size_gate_picks_single_tier_on_small_input(
+    spark, parity_corpus, monkeypatch
+):
+    """r6 size-adaptive gate: below PREFIX_MIN_PAIRS candidate pairs the
+    verify must collapse to the single-tier path (every surviving pair goes
+    through _score_full) — and the result must equal the forced-tier run
+    (parity is the gate's license)."""
     from datasketches_pig_spark.incremental import all_bands
-    from datasketches_pig_spark.operators import verify as V
     from datasketches_pig_spark.operators.lsh import candidate_pairs
     from datasketches_pig_spark.operators.stages import signature_stage
 
@@ -177,19 +179,19 @@ def test_prefix_size_gate_picks_single_tier_on_small_input(spark, parity_corpus)
             for r in gated.select("a", "b", "is_dup").collect()
         }
         tier2_gated = captured["tier2"]
-        none_run = V.verify_pairs(
-            cands,
-            sigs,
-            DedupConfig(verify_prefix=None),
-            transcripts=clips.select("clip_id", "transcript"),
-        )
-        none_run.count()
+        with monkeypatch.context() as m:
+            # a "prefix" of the whole sketch is no prefix: single tier, gate
+            # or not
+            m.setattr(V, "PREFIX_HASHES", cfg.kmv_k)
+            m.setattr(V, "PREFIX_MIN_PAIRS", 0)
+            none_run = V.verify_pairs(
+                cands, sigs, cfg, transcripts=clips.select("clip_id", "transcript")
+            )
+            none_run.count()
         tier2_none = captured["tier2"]
+        monkeypatch.setattr(V, "PREFIX_MIN_PAIRS", 0)
         forced = V.verify_pairs(
-            cands,
-            sigs,
-            DedupConfig(verify_prefix_min_pairs=0),
-            transcripts=clips.select("clip_id", "transcript"),
+            cands, sigs, cfg, transcripts=clips.select("clip_id", "transcript")
         )
         rows_forced = {
             (r["a"], r["b"]): r["is_dup"]
@@ -199,8 +201,52 @@ def test_prefix_size_gate_picks_single_tier_on_small_input(spark, parity_corpus)
     finally:
         V._score_full = orig
     # the gate collapsed to the single-tier plan: tier-2 sees exactly the
-    # pairs the explicit verify_prefix=None baseline sends it, and MORE than
+    # pairs the explicit single-tier baseline sends it, and MORE than
     # the forced-tier run (whose prefix tier decides most pairs upstream)
     assert tier2_gated == tier2_none
     assert tier2_forced < tier2_gated
     assert rows_gated == rows_forced
+
+
+def test_small_kmv_k_constructs_and_runs_single_tier(
+    spark, parity_corpus, monkeypatch
+):
+    """kmv_k is any power of 2 >= 16.  A sketch no wider than PREFIX_HASHES
+    has no proper prefix, so even with the size gate off verify runs the
+    single tier: no prefix thresholds are built and _score_full sees every
+    surviving pair (as many as under the default gate)."""
+    from datasketches_pig_spark.incremental import all_bands
+    from datasketches_pig_spark.operators.lsh import candidate_pairs
+    from datasketches_pig_spark.operators.stages import signature_stage
+
+    for k in (16, 32, 64):
+        assert DedupConfig(kmv_k=k).kmv_k == k
+
+    clips, _ = parity_corpus
+    cfg = DedupConfig(kmv_k=64)
+    sigs = signature_stage(clips, cfg).localCheckpoint()
+    cands = candidate_pairs(all_bands(sigs, cfg), cfg).distinct().localCheckpoint()
+    transcripts = clips.select("clip_id", "transcript")
+
+    tier2 = []
+    orig = V._score_full
+
+    def spy(slim_pairs, signatures, kmv_k, bcast=False):
+        tier2.append(slim_pairs.count())
+        return orig(slim_pairs, signatures, kmv_k, bcast=bcast)
+
+    def no_tier(*args, **kwargs):
+        raise AssertionError("prefix tier built at kmv_k=64")
+
+    monkeypatch.setattr(V, "_score_full", spy)
+    monkeypatch.setattr(V, "prefix_hit_thresholds", no_tier)
+    gated = V.verify_pairs(cands, sigs, cfg, transcripts=transcripts)
+    rows_gated = sorted(tuple(r) for r in gated.select("a", "b", "is_dup").collect())
+    monkeypatch.setattr(V, "PREFIX_MIN_PAIRS", 0)
+    ungated = V.verify_pairs(cands, sigs, cfg, transcripts=transcripts)
+    rows_ungated = sorted(
+        tuple(r) for r in ungated.select("a", "b", "is_dup").collect()
+    )
+
+    assert tier2[0] > 0 and tier2[0] == tier2[1]
+    assert rows_gated == rows_ungated

@@ -403,15 +403,15 @@ def test_containment_dedup_planted(spark):
     )
 
 
-def test_minhash_prefix_verify_parity(spark):
+def test_minhash_prefix_verify_parity(spark, monkeypatch):
     """r5 prefix screen: minhash_dedup_pairs with the bottom-p KMV prefilter
-    (default) must emit exactly the pairs AND jaccard values of the
-    join-everything baseline (prefix_verify=None), on a corpus spanning the
-    screen's routes: exact-by-prefix short docs, big docs that must reach
-    the gram join, near-threshold pairs, size-ratio rejects, and a CJK
-    char-fallback dup."""
+    must emit exactly the pairs AND jaccard values of the join-everything
+    baseline, on a corpus spanning the screen's routes: exact-by-prefix
+    short docs, big docs that must reach the gram join, near-threshold
+    pairs, size-ratio rejects, and a CJK char-fallback dup."""
     import numpy as np
 
+    from datasketches_pig_spark.textops import dedup as dd
     from datasketches_pig_spark.textops.dedup import minhash_dedup_pairs
 
     rng = np.random.default_rng(5150)
@@ -450,24 +450,30 @@ def test_minhash_prefix_verify_parity(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string").repartition(8)
     df = df.localCheckpoint()
 
+    screens = []
+    orig_screen = dd._prefix_screen
+
+    def spy(cands, sigs, threshold, p):
+        screens.append(p)
+        return orig_screen(cands, sigs, threshold, p)
+
+    monkeypatch.setattr(dd, "_prefix_screen", spy)
+    # this mixed corpus is mostly short docs, so the corpus-adaptive gate
+    # (correctly) turns the screen off: the default run is the baseline
     base = {
         (r["a"], r["b"]): r["jaccard"]
-        for r in minhash_dedup_pairs(
-            df, "doc_id", "text", 3, 0.5, prefix_verify=None
-        ).collect()
+        for r in minhash_dedup_pairs(df, "doc_id", "text", 3, 0.5).collect()
     }
+    assert screens == []
+    # a gate of 0 forces the screen
+    monkeypatch.setattr(dd, "PREFIX_SCREEN_MIN_MEAN_SHINGLES", 0)
     for p in (64, 128):  # 128 = the r6 default; 64 must stay parity-safe
+        monkeypatch.setattr(dd, "PREFIX_SCREEN_HASHES", p)
         pref = {
             (r["a"], r["b"]): r["jaccard"]
-            for r in minhash_dedup_pairs(
-                # prefix_min_mean_shingles=0 forces the screen: this mixed
-                # corpus is mostly short docs, so the corpus-adaptive gate
-                # would otherwise (correctly) turn the screen off and the
-                # test would compare the baseline with itself
-                df, "doc_id", "text", 3, 0.5, prefix_verify=p,
-                prefix_min_mean_shingles=0,
-            ).collect()
+            for r in minhash_dedup_pairs(df, "doc_id", "text", 3, 0.5).collect()
         }
+        assert screens[-1] == p
         assert set(base) == set(pref), (p, set(base) ^ set(pref))
         for k in base:
             assert abs(base[k] - pref[k]) < 1e-12, (p, k, base[k], pref[k])

@@ -32,11 +32,13 @@ def test_driver_dsu_path(spark, graph):
     assert got == EXPECTED
 
 
-def test_distributed_path_identical(spark, graph):
+def test_distributed_path_identical(spark, graph, monkeypatch):
+    from datasketches_pig_spark.operators import unionfind
     from datasketches_pig_spark.operators.unionfind import connected_components
 
     edges, verts = graph
-    out = connected_components(edges, verts, max_driver_edges=0)  # force joins
+    monkeypatch.setattr(unionfind, "DRIVER_DSU_MAX_EDGES", 0)  # force joins
+    out = connected_components(edges, verts)
     got = {r.clip_id: r.cluster_id for r in out.collect()}
     assert got == EXPECTED
 
@@ -65,12 +67,15 @@ def _scalar_dsu(edges, verts):
         ("star", 300, 0),      # one hub — the hot-key shape salting exists for
     ],
 )
-def test_distributed_matches_scalar_dsu_on_generated_graphs(spark, shape, n, extra):
+def test_distributed_matches_scalar_dsu_on_generated_graphs(
+    spark, shape, n, extra, monkeypatch
+):
     """Distributed min-label propagation == scalar DSU on seeded generated
     graphs, including the two pathological shapes (long path: many fixpoint
     rounds; star: one high-degree vertex)."""
     import numpy as np
 
+    from datasketches_pig_spark.operators import unionfind
     from datasketches_pig_spark.operators.unionfind import connected_components
 
     rng = np.random.default_rng(4242)
@@ -86,6 +91,7 @@ def test_distributed_matches_scalar_dsu_on_generated_graphs(spark, shape, n, ext
     expected = _scalar_dsu(edges, verts)
     edf = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
     vdf = spark.createDataFrame(pd.DataFrame({"clip_id": verts}))
-    out = connected_components(edf, vdf, max_driver_edges=0)  # force joins
+    monkeypatch.setattr(unionfind, "DRIVER_DSU_MAX_EDGES", 0)  # force joins
+    out = connected_components(edf, vdf)
     got = {r.clip_id: r.cluster_id for r in out.collect()}
     assert got == expected

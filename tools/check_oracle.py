@@ -2,6 +2,10 @@
 oracle_sql() on the same parquet tables at sf0.01, compare row count, schema
 (column names), and a value hash over column-name-sorted, row-sorted output.
 
+Queries run in a session configured like a caller's default one (ANSI on, AQE
+partition coalescing on, 200 shuffle partitions), not in get_spark's tuned
+settings: tuning flags may change speed, never results.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -92,7 +96,10 @@ def main() -> None:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("oracle-check")
+    spark = get_spark("oracle-check").newSession()
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

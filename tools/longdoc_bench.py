@@ -1,7 +1,7 @@
 """Long-document evidence for the text prefix screen (VERDICT r5 §3, r6).
 
 The corpus-adaptive gate in ``textops/dedup.py:minhash_dedup_pairs``
-auto-disables the prefix screen below ``4 * prefix_verify`` mean shingles,
+auto-disables the prefix screen below ``4 * p`` mean shingles,
 resting on a measured short-doc LOSS of the r5 Arrow screen.  The win the
 screen exists for is 10³–10⁴-shingle web pages — but measurement (r6) and
 the bound algebra agree the win region is narrower than "long docs":
@@ -23,8 +23,8 @@ and measures OFF vs ON(p=64) vs ON(p=128):
                          catches ~69%%, the p=128 screen rejects ~90%%)
   run   <dir> <cores> <mode>   one timed minhash_dedup_pairs run; mode =
                          on64 | on128 (screen forced at that prefix) |
-                         off (prefix_verify=None, join-everything baseline) |
-                         auto (default gate)
+                         off (gate never met: join-everything baseline,
+                         after the probe) | auto (default gate)
   all   [n_docs]         gen + interleaved taskset-pinned off/on64/on128
                          rounds (the same steal-hygiene as scaling_bench.py)
 
@@ -35,6 +35,7 @@ across modes — parity), and the chosen mode.
 from __future__ import annotations
 
 import json
+import math
 import os
 import subprocess
 import sys
@@ -91,24 +92,26 @@ def gen(out_dir: str, n_docs: int) -> None:
 
 def run(in_dir: str, cores: int, mode: str) -> None:
     from datasketches_pig_spark.session import get_spark, warm_python_workers
+    from datasketches_pig_spark.textops import dedup
     from datasketches_pig_spark.textops.dedup import minhash_dedup_pairs
 
-    kw = {
-        "on64": {"prefix_verify": 64, "prefix_min_mean_shingles": 0},
-        "on128": {"prefix_verify": 128, "prefix_min_mean_shingles": 0},
-        "off": {"prefix_verify": None},
-        "auto": {},
-    }[mode]
+    # (p, mean-shingle gate) per mode, set before any plan is built
+    if mode != "auto":
+        dedup.PREFIX_SCREEN_HASHES, dedup.PREFIX_SCREEN_MIN_MEAN_SHINGLES = {
+            "on64": (64, 0),
+            "on128": (128, 0),
+            "off": (dedup.PREFIX_SCREEN_HASHES, math.inf),
+        }[mode]
     spark = get_spark(f"longdoc-{mode}-{cores}", cores=cores, shuffle_partitions=2 * cores)
     warm_python_workers(spark)
     docs = spark.read.parquet(f"{in_dir}/documents.parquet")
     n = docs.count()
-    minhash_dedup_pairs(docs, "doc_id", "text", 3, 0.8, **kw).count()  # warm
+    minhash_dedup_pairs(docs, "doc_id", "text", 3, 0.8).count()  # warm
     trials = int(os.environ.get("SPARK_GRAFT_LONGDOC_TRIALS", "1"))
     walls, n_pairs = [], 0
     for _ in range(trials):
         t0 = time.time()
-        n_pairs = minhash_dedup_pairs(docs, "doc_id", "text", 3, 0.8, **kw).count()
+        n_pairs = minhash_dedup_pairs(docs, "doc_id", "text", 3, 0.8).count()
         walls.append(round(time.time() - t0, 2))
     print(
         json.dumps(

@@ -9,6 +9,10 @@ report is attributable to verify_pairs.
 Usage:
   python tools/verify_bytes.py gen <dir> <n_groups>
   python tools/verify_bytes.py run <dir> <cores> <prefix|none>
+
+``run <prefix>`` sets ``verify.PREFIX_HASHES`` to that value and turns the
+pair-count gate off, so the tier runs at any corpus size; ``none`` sets it to
+``kmv_k``, which is no proper prefix, so verify runs the single tier.
 """
 
 from __future__ import annotations
@@ -51,10 +55,12 @@ def run(in_dir: str, cores: int, prefix: int | None) -> None:
         release_shard_caches,
     )
     from datasketches_pig_spark.operators.stages import signature_stage
-    from datasketches_pig_spark.operators.verify import verify_pairs
+    from datasketches_pig_spark.operators import verify as V
     from datasketches_pig_spark.session import get_spark, warm_python_workers
 
-    cfg = DedupConfig(verify_prefix=prefix)
+    cfg = DedupConfig()
+    V.PREFIX_HASHES = cfg.kmv_k if prefix is None else prefix
+    V.PREFIX_MIN_PAIRS = 0
     spark = get_spark(
         f"verify-bytes-{prefix}",
         cores=cores,
@@ -73,7 +79,7 @@ def run(in_dir: str, cores: int, prefix: int | None) -> None:
     ui = spark.sparkContext.uiWebUrl
     before = _stages(ui)
     t0 = time.time()
-    verified = verify_pairs(
+    verified = V.verify_pairs(
         cands, sigs, cfg, transcripts=clips.select("clip_id", "transcript")
     ).localCheckpoint()
     n_dup = verified.filter("is_dup").count()
