@@ -26,36 +26,27 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from datasketches_pig_spark.config import DedupConfig
-
-# unsigned-int64 comparator for array_sort: the kmv arrays are ascending
-# uint64 hashes stored via .view(int64), so large hashes (>= 2^63) read as
-# negative longs — unsigned order = signed order within each sign class,
-# with the negative class sorting LAST
-_UCMP = (
-    "(l, r) -> CASE WHEN (l < 0L) = (r < 0L) THEN "
-    "CASE WHEN l < r THEN -1 WHEN l > r THEN 1 ELSE 0 END "
-    "WHEN l < 0L THEN 1 ELSE -1 END"
-)
+from datasketches_pig_spark.operators.verify import _flipped_prefix
+from datasketches_pig_spark.sketch.theta import theta_jaccard
 
 
 def kmv_pair_jaccard(ka: str, kb: str, na: str, nb: str, k: int):
-    """JVM-side KMV pair-Jaccard column, mirroring the Arrow kernels'
-    ``operators/signatures.kmv_jaccard`` semantics (unit-tested against it):
+    """JVM-side KMV pair-Jaccard column, mirroring
+    ``operators/signatures.kmv_jaccard`` (unit-tested against it):
 
     - both sides complete (``n <= k`` so the kmv array IS the gram set) →
       exact ``|A∩B| / |A∪B|``;
-    - either side truncated → the standard KMV estimate: fraction of the
-      bottom-k of the merged union present in BOTH sketches.  Taking the
-      bottom-k *of the union* (not the raw 2k-element union) is what keeps
-      the estimator unbiased — the raw-union denominator would bias J low
-      and drop true near-threshold pairs at scale.
+    - either side truncated → ``sketch.theta.theta_jaccard`` over the
+      sign-flipped sketches: the fraction of the bottom-k of the merged
+      union present in BOTH.  Taking the bottom-k *of the union* (not the
+      raw 2k-element union) is what keeps the estimator unbiased — the
+      raw-union denominator would bias J low and drop true near-threshold
+      pairs at scale.
     """
     exact_j = F.size(F.array_intersect(ka, kb)) / F.greatest(
         F.size(F.array_union(ka, kb)), F.lit(1)
     )
-    window = F.expr(f"slice(array_sort(array_union({ka}, {kb}), {_UCMP}), 1, {k})")
-    hits = F.size(F.array_intersect(window, F.array_intersect(ka, kb)))
-    est = hits / F.greatest(F.size(window), F.lit(1))
+    est = theta_jaccard(_flipped_prefix(ka, k), _flipped_prefix(kb, k), k)
     return F.when((F.col(na) <= k) & (F.col(nb) <= k), exact_j).otherwise(est)
 
 

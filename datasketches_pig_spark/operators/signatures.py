@@ -42,7 +42,8 @@ def kmv_jaccard(a: np.ndarray, b: np.ndarray, k: int) -> float:
     Take the k smallest of the union; the fraction of those present in both
     sketches estimates J.  When both sketches are exact (|a|,|b| < k) this IS
     the exact Jaccard — the exact-mode shortcut the reference tests rely on
-    (``theta/DataToSketchTest.java:137``).
+    (``theta/DataToSketchTest.java:137``).  The scalar reference for the
+    engine's one column-level form, ``sketch.theta.theta_jaccard``.
     """
     if len(a) == 0 or len(b) == 0:
         return 0.0
@@ -50,96 +51,6 @@ def kmv_jaccard(a: np.ndarray, b: np.ndarray, k: int) -> float:
     inter = np.intersect1d(a, b, assume_unique=True)
     n_hits = np.searchsorted(inter, union[-1], side="right")
     return float(n_hits) / float(len(union)) if len(union) else 0.0
-
-
-def kmv_pair_stats(
-    a_vals: np.ndarray,
-    a_counts: np.ndarray,
-    b_vals: np.ndarray,
-    b_counts: np.ndarray,
-    k: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-pair KMV union statistics over a batch: ``(hits, denom, union)``
-    where ``union`` is the size of the merged sketch union, ``denom`` is
-    ``min(union, k)`` and ``hits`` counts union elements within the bottom-k
-    of the union that appear in BOTH sketches — the raw ingredients of the
-    KMV Jaccard estimate (``kmv_jaccard_batch``) and of the prefix-verify
-    confidence bounds (``operators/verify.py``).
-
-    Method: one global lexsort of (pair_id, value) over both sides, then the
-    per-pair union ranks and duplicate flags fall out of adjacent-element
-    comparisons + cumsums (segment algebra, O(N log N) total).
-    """
-    n_pairs = len(a_counts)
-    if n_pairs == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    pid = np.concatenate(
-        [
-            np.repeat(np.arange(n_pairs, dtype=np.int64), a_counts),
-            np.repeat(np.arange(n_pairs, dtype=np.int64), b_counts),
-        ]
-    )
-    val = np.concatenate([a_vals.view(U64), b_vals.view(U64)])
-    order = np.lexsort((val, pid))
-    pid_s = pid[order]
-    val_s = val[order]
-
-    new_pair = np.empty(len(pid_s), dtype=bool)
-    if len(pid_s):
-        new_pair[0] = True
-        new_pair[1:] = pid_s[1:] != pid_s[:-1]
-    # a value that equals its predecessor within the same pair appears in
-    # BOTH sketches (each side is internally unique)
-    dup = np.zeros(len(pid_s), dtype=bool)
-    if len(pid_s) > 1:
-        dup[1:] = (~new_pair[1:]) & (val_s[1:] == val_s[:-1])
-
-    union_flag = ~dup  # first occurrence per (pair, value) = a union element
-    cu = np.cumsum(union_flag)
-    gidx = np.cumsum(new_pair) - 1  # pair index of every element
-    starts = np.flatnonzero(new_pair)
-    start_cu = cu[starts] - union_flag[starts]
-    # 0-based rank of each union element inside its pair's sorted union
-    rank = cu - 1 - start_cu[gidx]
-
-    union_sizes = np.zeros(n_pairs, dtype=np.int64)
-    np.add.at(union_sizes, gidx, union_flag)
-    denom = np.minimum(union_sizes, k)
-
-    # a dup at position p marks a common value whose union element is at p-1
-    hit_pos = np.flatnonzero(dup)
-    hit_pos = hit_pos[rank[hit_pos - 1] < k]
-    hits = np.zeros(n_pairs, dtype=np.int64)
-    np.add.at(hits, gidx[hit_pos], 1)
-    return hits, denom, union_sizes
-
-
-def kmv_jaccard_batch(
-    a_vals: np.ndarray,
-    a_counts: np.ndarray,
-    b_vals: np.ndarray,
-    b_counts: np.ndarray,
-    k: int,
-) -> np.ndarray:
-    """Vectorized ``kmv_jaccard`` over a batch of pairs — no per-pair Python.
-
-    Inputs are the concatenated per-pair bottom-k sketches (each pair's slice
-    sorted unique uint64, as ``kmv_bottom_k`` emits) with per-pair lengths.
-    Semantics identical to ``kmv_jaccard``: take the k smallest of the union;
-    the fraction of those present in both sketches estimates J (exact when
-    both sides are in exact mode).  Stats via ``kmv_pair_stats``.
-    """
-    n_pairs = len(a_counts)
-    if n_pairs == 0:
-        return np.zeros(0)
-    a_counts = np.asarray(a_counts, dtype=np.int64)
-    b_counts = np.asarray(b_counts, dtype=np.int64)
-    hits, denom, _ = kmv_pair_stats(a_vals, a_counts, b_vals, b_counts, k)
-    out = np.zeros(n_pairs)
-    use = (denom > 0) & (a_counts > 0) & (b_counts > 0)
-    out[use] = hits[use] / denom[use]
-    return out
 
 
 def kmv_distinct_estimate(sketch: np.ndarray, k: int) -> float:

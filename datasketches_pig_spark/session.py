@@ -74,7 +74,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         # coalescePartitions is OFF: AQE coalesces by shuffle BYTES, but the
         # engine's hot shuffles carry CPU-dense rows (candidate pairs ~60 B/row
-        # feeding Arrow verify kernels), so byte-proportional coalescing folds
+        # feeding per-pair verify scoring), so byte-proportional coalescing folds
         # a 16-partition stage into 2-4 tasks and idles the other cores —
         # measured 19.4s -> 12.8s at 8 cores and 20.7s -> 15.3s at 32 cores on
         # the 23k-clip pipeline (verify stage 9.3s -> 3.7s).  Partition counts
@@ -108,8 +108,7 @@ def warm_python_workers(spark: SparkSession, tasks: int | None = None) -> None:
     interpreter startups.
     """
     if tasks is None:
-        master = spark.sparkContext.master
-        tasks = int(master.split("[")[1].rstrip("]")) if "[" in master else 32
+        tasks = spark.sparkContext.defaultParallelism
 
     def warm(batches):
         import numpy as np

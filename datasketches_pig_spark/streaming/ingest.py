@@ -18,42 +18,9 @@ table-shaped, and each micro-batch needs multi-stage joins against it.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from datasketches_pig_spark.config import DedupConfig
-
-
-def _fold_batch_into_history(
-    spark: SparkSession,
-    new_sigs: DataFrame,
-    assignments: DataFrame,
-    merges: DataFrame,
-    cfg: DedupConfig,
-    table_prefix: str,
-    base_path: str,
-) -> None:
-    """Append the batch's state to the stores and apply old-cluster merges.
-
-    COST + ATOMICITY CONTRACT (parquet mode): per-batch IO is
-    O(batch + buckets + cluster rows) — ``incremental.fold_history``
-    APPENDS the batch's signatures to the bucketed store (the ~8 KB/clip
-    history volume is never rewritten) and merges band-bucket summaries
-    sketch-style from the old summaries plus the batch's band rows only
-    (``lsh.merge_bucket_summaries``).  The fold is JOURNALED (r4): re-fold
-    inputs + per-step completion flags + staged copies of the two small
-    rewrites live in ``{base_path}/_fold_journal`` until every step
-    commits, so a crash at any point is recovered by
-    ``incremental.repair_fold`` (the sink calls it at batch start) and a
-    replayed micro-batch whose clips are already folded is skipped.  An
-    Iceberg catalog collapses the journal into one atomic multi-table
-    transaction with the same logical fold.
-    """
-    from datasketches_pig_spark.incremental import fold_history
-
-    fold_history(
-        spark, new_sigs, assignments, merges, cfg, base_path, table_prefix
-    )
 
 
 def streaming_ingest_dedup(
@@ -85,7 +52,7 @@ def streaming_ingest_dedup(
     from datasketches_pig_spark.incremental import incremental_dedup
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datasketches_pig_spark.incremental import repair_fold
+        from datasketches_pig_spark.incremental import fold_history, repair_fold
 
         batch_df = batch_df.localCheckpoint()
         if not batch_df.take(1):
@@ -137,9 +104,13 @@ def streaming_ingest_dedup(
             assignments.write.mode("overwrite")
             .parquet(f"{assignments_sink}/batch_id={batch_id}")
         )
-        _fold_batch_into_history(
+        # fold the batch into the stores: per-batch IO is O(batch + buckets
+        # + cluster rows) — signatures APPEND, bucket summaries merge
+        # sketch-style — and the fold is journaled, so repair_fold above
+        # completes an interrupted one (see fold_history)
+        fold_history(
             spark, inc.new_sigs, assignments, inc.merges.localCheckpoint(),
-            cfg, table_prefix, base_path,
+            cfg, base_path, table_prefix,
         )
         if transcript_store is not None:
             (

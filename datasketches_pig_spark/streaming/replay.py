@@ -96,49 +96,37 @@ def _replay_events(
         (part,) = parts
         shutil.copy(part, os.path.join(stream_dir, f"{i:04d}.parquet"))
 
+    # the stream runs in its own session, so the caller's conf is never
+    # touched.  Every micro-batch pays a state-store load/commit PER SHUFFLE
+    # PARTITION and the per-type state op has a handful of keys: one state
+    # partition (baked into the fresh checkpoint at batch 0; state still
+    # crosses every batch boundary) plus no no-data micro-batches cut the
+    # replay 4.0–5.1 s → 2.7–3.1 s warm at hash-identical output (sf0.1,
+    # 32 cores).  The remaining wall is the engine's per-trigger floor
+    # (~650 ms/batch: addBatch ~500 ms of which state commit ~400 ms, plus
+    # offset/WAL logs + planning ~170 ms) — async progress tracking would
+    # hide the log writes but is incompatible with availableNow.
+    stream = spark.newSession()
+    stream.conf.set("spark.sql.shuffle.partitions", "1")
+    stream.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     src = (
-        spark.readStream.schema(events.schema)
+        stream.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
         .select("event_type", "user_id", "value")
     )
     out = streaming_replay_stats(src, k=k, seed=seed)
     qname = f"replay_{uuid.uuid4().hex[:12]}"
-    # the per-type state op has a handful of keys, but every micro-batch
-    # pays a state-store load/commit PER SHUFFLE PARTITION — at the session
-    # default (2x cores) that is ~2 s/batch of pure state-store overhead.
-    # Scope the streaming query to a few state partitions (baked into the
-    # fresh checkpoint at batch 0) and restore the session conf after.
-    # r7 trim (interleaved A/B at sf0.1/32c, 4 trials): parts 8→2 + no-data
-    # micro-batches off cut the replay 4.0–5.1 s → 2.7–3.1 s warm at
-    # hash-identical output.  The remaining wall is the engine's per-trigger
-    # floor (~650 ms/batch: addBatch ~500 ms of which state commit ~400 ms,
-    # plus offset/WAL logs + planning ~170 ms) — async progress tracking
-    # would hide the log writes but is incompatible with availableNow.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    # r8: 2 → 1 state partition — the op has a handful of keys and every
-    # micro-batch pays a state-store load/commit per partition; one store
-    # halves that fixed cost and changes nothing about statefulness (state
-    # still crosses every batch boundary)
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    emitted = spark.table(qname)
+    query = (
+        out.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    emitted = stream.table(qname)
     # last emission per key = struct-max on the strictly-increasing n_events
     final = (
         emitted.groupBy("event_type")
@@ -156,5 +144,5 @@ def _replay_events(
     # final state is a handful of per-type rows, so materialize it (bounded,
     # justified collect) and release the sink before returning
     rows = final.collect()
-    spark.catalog.dropTempView(qname)
+    stream.catalog.dropTempView(qname)
     return spark.createDataFrame(rows, final.schema)

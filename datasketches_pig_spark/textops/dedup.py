@@ -454,13 +454,17 @@ def _prefix_screen(
     form measured a ~9% reject rate on a boilerplate corpus where the
     exact form rejects ~90%).  Exact-by-prefix accepts emit
     ``inter/union`` — the same integer ratio the gram join would compute."""
-    from datasketches_pig_spark.operators.verify import prefix_hit_thresholds
+    from datasketches_pig_spark.operators.verify import (
+        _flipped_prefix,
+        prefix_hit_thresholds,
+    )
 
     U = prefix_hit_thresholds(p, _PREFIX_REJECT_DELTA, (threshold,))["U"][
         threshold
     ]
-    i64_min = -(1 << 63)
-    flipped = F.transform(F.col("kmv"), lambda x: x.bitwiseXOR(F.lit(i64_min)))
+    # sigs carry the bottom-p prefix already (kmv_prefix=p), so the slice
+    # inside _flipped_prefix keeps every hash
+    flipped = _flipped_prefix("kmv", p)
 
     # ONE slim join chain (id → exact count + bottom-p prefix per side);
     # size-rejects are rare among LSH candidates (banding selects similar

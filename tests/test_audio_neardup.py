@@ -98,9 +98,9 @@ def test_empty_and_single_clip_edges(spark):
 
 
 def test_kmv_pair_jaccard_matches_numpy_reference(spark):
-    """The JVM-side kmv_pair_jaccard column must agree with the Arrow
-    kernels' numpy kmv_jaccard on truncated sketches — including hashes
-    >= 2^63 (negative int64), which pins the unsigned array_sort comparator.
+    """The JVM-side kmv_pair_jaccard column must agree with the scalar
+    numpy kmv_jaccard on truncated sketches — including hashes >= 2^63
+    (negative int64), which pins the sign flip's unsigned order.
     Exact-mode pairs (both sides complete) must report the exact Jaccard."""
     from datasketches_pig_spark.audioops.neardup import kmv_pair_jaccard
     from datasketches_pig_spark.operators.signatures import (

@@ -111,3 +111,46 @@ def test_doc_arrow_passes_read_the_scan_as_split(spark, monkeypatch, op):
     for df in (out, *checkpointed):
         plan = _executed_plan(df)
         assert "RoundRobinPartitioning" not in plan, plan
+
+
+_PYTHON_NODE = re.compile(r"\b(\w*InPandas\w*|\w*InArrow\w*|\w*EvalPython\w*)\b")
+
+
+@pytest.mark.parametrize("tiered", [False, True])
+def test_verified_frame_crosses_python_only_for_containment(
+    spark, monkeypatch, tiered
+):
+    """The verify stage scores both modalities in the JVM: across the
+    pipeline's verified frame and every frame checkpointed while it is
+    built, the one Python-evaluated node is the borderline containment
+    ``MapInPandas``.  Checked on the single-tier route and, with the
+    prefix-tier gate opened, on the tiered one."""
+    import datasketches_pig_spark.pipeline as pipeline
+    from datasketches_pig_spark.operators import verify
+
+    clips_pdf, _, _ = generate_clips_pandas(20, seed=5)
+    clips = spark.createDataFrame(clips_pdf)
+    if tiered:
+        monkeypatch.setattr(verify, "PREFIX_MIN_PAIRS", 0)
+    built = []
+    real_verify = pipeline.verify_pairs
+
+    def recording_verify(*args, **kwargs):
+        checkpointed = _record_checkpoints(spark, monkeypatch)
+        out = real_verify(*args, **kwargs)
+        built.extend([*checkpointed, out])
+        return out
+
+    monkeypatch.setattr(pipeline, "verify_pairs", recording_verify)
+    run_pipeline(spark, clips, DedupConfig())
+    monkeypatch.undo()
+    assert len(built) >= 2  # the full-sketch scores are checkpointed
+    # the physical plan before adaptive execution: an executed adaptive plan
+    # prints its initial and final trees, each node twice
+    nodes = [
+        line.strip()
+        for df in built
+        for line in df._jdf.queryExecution().sparkPlan().toString().splitlines()
+        if _PYTHON_NODE.search(line)
+    ]
+    assert len(nodes) == 1 and "MapInPandas substr_check" in nodes[0], nodes

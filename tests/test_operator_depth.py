@@ -212,29 +212,6 @@ def test_hamming64_matches_scalar_popcount():
     assert got.tolist() == want
 
 
-def test_kmv_jaccard_batch_matches_scalar():
-    from datasketches_pig_spark.operators.signatures import (
-        kmv_bottom_k,
-        kmv_jaccard,
-        kmv_jaccard_batch,
-    )
-
-    rng = np.random.default_rng(13)
-    k = 32
-    sketches = []
-    for _ in range(12):
-        n = int(rng.integers(0, 120))
-        sketches.append(kmv_bottom_k(rng.integers(0, 2**64, size=n, dtype=np.uint64), k))
-    pairs = [(i, j) for i in range(len(sketches)) for j in range(i + 1, len(sketches))]
-    a_vals = np.concatenate([sketches[i] for i, _ in pairs])
-    b_vals = np.concatenate([sketches[j] for _, j in pairs])
-    a_counts = np.array([len(sketches[i]) for i, _ in pairs])
-    b_counts = np.array([len(sketches[j]) for _, j in pairs])
-    got = kmv_jaccard_batch(a_vals, a_counts, b_vals, b_counts, k)
-    want = [kmv_jaccard(sketches[i], sketches[j], k) for i, j in pairs]
-    assert got.tolist() == pytest.approx(want)
-
-
 def test_kernel_bad_args_raise():
     from datasketches_pig_spark.operators.signatures import (
         band_hashes,

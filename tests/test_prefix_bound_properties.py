@@ -1,5 +1,5 @@
 """Hypothesis property tests for the prefix-KMV verify math (r5) — the
-Chernoff-KL bound and the KMV pair-statistics kernel it feeds.
+Chernoff-KL bound and the KMV pair statistics it is indexed by.
 
 Pure-kernel (no Spark).  Set *structure* (sizes, overlap) is adversarial via
 Hypothesis; set *elements* are pushed through MurmurHash3 first, exactly as
@@ -7,18 +7,13 @@ in production, so hash order is the uniform permutation the hypergeometric
 argument requires — Hypothesis controls the combinatorics, not the hash
 order.  The probabilistic soundness checks use δ = 1e-9, so a genuine bound
 violation in a few hundred examples is ~impossible; any failure here is a
-kernel bug."""
+bug in the bounds or the estimator."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from datasketches_pig_spark.functions.murmur3 import murmur3_long_batch
-from datasketches_pig_spark.operators.signatures import (
-    kmv_bottom_k,
-    kmv_jaccard,
-    kmv_jaccard_batch,
-    kmv_pair_stats,
-)
+from datasketches_pig_spark.operators.signatures import kmv_bottom_k, kmv_jaccard
 from datasketches_pig_spark.operators.verify import PREFIX_DELTA, binomial_kl_bounds
 
 # adversarial overlap structure: |common|, |only-A|, |only-B| element counts
@@ -43,26 +38,32 @@ def _hashed_pair(n_common, n_a, n_b, tag):
     return sa, sb
 
 
+def _pair_stats(ka, kb, k):
+    """``(hits, denom, union)`` of one sketch pair in scalar numpy: the
+    merged union's size, ``denom = min(union, k)``, and the count of its
+    bottom-``denom`` elements held by BOTH sketches."""
+    union = np.union1d(ka, kb)
+    denom = min(len(union), k)
+    hits = int(np.isin(union[:denom], np.intersect1d(ka, kb)).sum())
+    return hits, denom, len(union)
+
+
 @given(_sets, st.integers(0, 10_000), st.sampled_from([8, 16, 64]))
 @settings(max_examples=60, deadline=None)
 def test_pair_stats_match_scalar_and_exact_mode(sizes, tag, k):
-    """kmv_pair_stats/kmv_jaccard_batch agree with the scalar kmv_jaccard,
-    and below k the estimate IS the exact Jaccard (the exact-mode contract
+    """hits / denom is the scalar kmv_jaccard (0.0 on an empty side), and
+    below k the estimate IS the exact Jaccard (the exact-mode contract
     every oracle depends on)."""
     sa, sb = _hashed_pair(*sizes, tag)
     ka, kb = kmv_bottom_k(sa, k), kmv_bottom_k(sb, k)
-    batch = kmv_jaccard_batch(
-        ka, np.array([len(ka)]), kb, np.array([len(kb)]), k
-    )[0]
-    assert batch == kmv_jaccard(ka, kb, k)
-    hits, denom, union = kmv_pair_stats(
-        ka, np.array([len(ka)]), kb, np.array([len(kb)]), k
-    )
-    assert 0 <= hits[0] <= denom[0] <= max(union[0], 1)
-    if len(sa) and len(sb) and len(sa) < k and len(sb) < k and union[0] <= k:
+    est = kmv_jaccard(ka, kb, k)
+    hits, denom, union = _pair_stats(ka, kb, k)
+    assert 0 <= hits <= denom <= max(union, 1)
+    assert est == (hits / denom if len(ka) and len(kb) else 0.0)
+    if len(sa) and len(sb) and len(sa) < k and len(sb) < k and union <= k:
         inter = len(np.intersect1d(sa, sb))
         exact = inter / (len(sa) + len(sb) - inter)
-        assert abs(batch - exact) < 1e-12
+        assert abs(est - exact) < 1e-12
 
 
 @given(_sets, st.integers(0, 10_000))
@@ -79,18 +80,14 @@ def test_bounds_bracket_full_estimate(sizes, tag):
     ka, kb = kmv_bottom_k(sa, k), kmv_bottom_k(sb, k)
     full = kmv_jaccard(ka, kb, k)
     pa, pb = ka[:p], kb[:p]
-    hits, denom, union = kmv_pair_stats(
-        pa, np.array([len(pa)]), pb, np.array([len(pb)]), p
-    )
-    est = hits[0] / denom[0] if denom[0] > 0 and len(pa) and len(pb) else 0.0
-    lb, ub = binomial_kl_bounds(
-        np.array([est]), np.array([denom[0]]), PREFIX_DELTA
-    )
+    hits, denom, union = _pair_stats(pa, pb, p)
+    est = hits / denom if denom > 0 and len(pa) and len(pb) else 0.0
+    lb, ub = binomial_kl_bounds(np.array([est]), np.array([denom]), PREFIX_DELTA)
     assert lb[0] <= est + 1e-12 and est <= ub[0] + 1e-12
     if len(pa) == 0 or len(pb) == 0:
         assert full == 0.0  # empty side: exact verifier's 0.0 convention
         return
-    if len(pa) < p and len(pb) < p and union[0] <= p:
+    if len(pa) < p and len(pb) < p and union <= p:
         # prefixes are the whole sketches — prefix estimate IS full estimate
         assert abs(est - full) < 1e-12
     assert lb[0] - 1e-12 <= full <= ub[0] + 1e-12

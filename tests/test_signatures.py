@@ -153,49 +153,6 @@ def test_audio_symbols_invariances():
     assert inter > 0.8
 
 
-def test_kmv_jaccard_batch_matches_scalar():
-    import numpy as np
-
-    from datasketches_pig_spark.operators.signatures import (
-        kmv_bottom_k,
-        kmv_jaccard,
-        kmv_jaccard_batch,
-    )
-
-    rng = np.random.RandomState(7)
-    k = 64
-    a_cells, b_cells, expected = [], [], []
-    for trial in range(200):
-        na, nb = rng.randint(0, 400), rng.randint(0, 400)
-        overlap = rng.randint(0, min(na, nb) + 1)
-        common = rng.randint(0, 1 << 62, size=overlap).astype(np.uint64)
-        a = kmv_bottom_k(
-            np.concatenate([common, rng.randint(0, 1 << 62, size=na - overlap).astype(np.uint64)])
-            if na
-            else np.empty(0, np.uint64),
-            k,
-        )
-        b = kmv_bottom_k(
-            np.concatenate([common, rng.randint(0, 1 << 62, size=nb - overlap).astype(np.uint64)])
-            if nb
-            else np.empty(0, np.uint64),
-            k,
-        )
-        a_cells.append(a.view(np.int64))
-        b_cells.append(b.view(np.int64))
-        expected.append(kmv_jaccard(a, b, k))
-    counts_a = np.array([len(c) for c in a_cells], dtype=np.int64)
-    counts_b = np.array([len(c) for c in b_cells], dtype=np.int64)
-    got = kmv_jaccard_batch(
-        np.concatenate(a_cells) if counts_a.sum() else np.empty(0, np.int64),
-        counts_a,
-        np.concatenate(b_cells) if counts_b.sum() else np.empty(0, np.int64),
-        counts_b,
-        k,
-    )
-    np.testing.assert_allclose(got, np.array(expected), rtol=0, atol=1e-12)
-
-
 # ---------------------------------------------------------------------------
 # flat word-shingle kernel (word_ngram_hash_sets / flat_token_hashes)
 # ---------------------------------------------------------------------------

@@ -162,3 +162,44 @@ def test_replay_hashes_64bit_user_ids_exactly(spark):
     assert row["n_events"] == 3
     assert row["sum_value"] == 7.0
     assert row["distinct_users"] == 2
+
+
+def test_replay_leaves_the_caller_session_conf_alone(spark, monkeypatch):
+    """The stream runs in its own session: the caller's shuffle width and
+    no-data micro-batch setting are unchanged while the query runs and
+    after it returns, and the replay still equals the batch GROUP BY hash
+    for hash."""
+    from conftest import SF_DIR
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from datasketches_pig_spark.queries import q_streaming_replay
+    from tools.check_oracle import value_hash
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    during = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def observing(self, *args, **kwargs):
+        during.append({k: spark.conf.get(k) for k in keys})
+        return await_termination(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", observing)
+    got = q_streaming_replay(spark, SF_DIR)
+    rows = [tuple(r) for r in got.collect()]
+    monkeypatch.undo()
+    assert during == [before]
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    want = events.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 4).alias("sum_value"),
+        F.countDistinct("user_id").alias("distinct_users"),
+    )
+    assert value_hash(got.columns, rows) == value_hash(
+        want.columns, [tuple(r) for r in want.collect()]
+    )
