@@ -7,7 +7,8 @@ bucket summaries + cluster assignments) and each new batch runs
     new_sigs   = signature_stage(new_clips)                 (narrow)
     new x new  = candidate_pairs(new_bands)                 (salted expansion)
     new x old  = new_bands ⋈ band-bucket store on band_key  (co-located join)
-    verified   = verify_pairs(pairs, new_sigs ∪ stored_sigs)
+    endpoints  = new_sigs ∪ (stored_sigs ⋉ ids of pairs)    (materialized)
+    verified   = verify_pairs(pairs, endpoints)
     clusters   = union-find over {new ids} ∪ {touched OLD cluster ids}
 
 Scale contract:
@@ -18,12 +19,19 @@ Scale contract:
   persisted ``center``, the same deterministic representative the original
   salted expansion star-linked through, so connectivity composes.
 * The band-bucket store is bucketed BY band_key, the signature store by
-  clip_id: both incremental joins shuffle only the day's batch.
+  clip_id, so neither history read shuffles the store.  The band join is
+  co-located on band_key.  The signature store is read by ONE semi join
+  against the pairs' endpoint ids: planned as a co-located merge join
+  (only the ids shuffle), which AQE turns into a broadcast semi join when
+  the id set is small — either way one scan.  Verify's per-pair joins read
+  the materialized endpoint frame (the batch + the old endpoints), never
+  the store.
 * Old clusters are merged through their cluster ids, not their members: the
   union-find vertex set is {new clip ids} ∪ {cluster ids of touched old
   clips} — bounded by the day's edge count, never by history size.
-* Per-batch IO over history is one columnar scan of the COMPACT stores
-  (bucket summaries ~100 B/bucket, signatures only for verified candidates)
+* Per-batch IO over history is one columnar scan of each COMPACT store
+  (bucket summaries ~100 B/bucket; signatures filtered to the candidates'
+  old endpoints before anything else reads them; clusters)
   — never a re-decode of raw payloads (~45 KB/clip): the scan is orders of
   magnitude smaller than re-running the pipeline, and
   ``tools/incremental_bench.py`` measures the wall-clock gap (2.3× at 94k
@@ -46,6 +54,12 @@ from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.operators.lsh import bucket_summaries, candidate_pairs
 from datasketches_pig_spark.operators.stages import signature_stage
 from datasketches_pig_spark.operators.verify import verify_pairs
+from datasketches_pig_spark.store import (
+    DEFAULT_BUCKETS,
+    bucket_count,
+    commit_json,
+    save_bucketed,
+)
 
 
 def all_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -73,41 +87,27 @@ def save_history(
     cfg: DedupConfig,
     base_path: str,
     table_prefix: str,
-    num_buckets: int = 64,
+    num_buckets: int = DEFAULT_BUCKETS,
 ) -> None:
     """Persist the dedup state a later incremental batch joins against:
     signatures bucketed by clip_id, bounded band-bucket summaries bucketed by
     band_key, cluster assignments bucketed by clip_id."""
-    from datasketches_pig_spark.store import save_signatures_bucketed
-
-    save_signatures_bucketed(
-        signatures, f"{table_prefix}_signatures", f"{base_path}/signatures",
-        num_buckets=num_buckets,
-    )
     buckets = bucket_summaries(
         all_bands(signatures, cfg), "band_key", "clip_id", cfg.max_bucket_size
     )
-    (
-        buckets.write.mode("overwrite")
-        .bucketBy(num_buckets, "band_key")
-        .sortBy("band_key")
-        .option("path", f"{base_path}/band_buckets")
-        .format("parquet")
-        .saveAsTable(f"{table_prefix}_band_buckets")
-    )
-    (
-        clusters.write.mode("overwrite")
-        .bucketBy(num_buckets, "clip_id")
-        .sortBy("clip_id")
-        .option("path", f"{base_path}/clusters")
-        .format("parquet")
-        .saveAsTable(f"{table_prefix}_clusters")
-    )
+    for name, df, key in (
+        ("signatures", signatures, "clip_id"),
+        ("band_buckets", buckets, "band_key"),
+        ("clusters", clusters, "clip_id"),
+    ):
+        save_bucketed(
+            df, f"{table_prefix}_{name}", f"{base_path}/{name}", key, num_buckets
+        )
     # stamp the store with its config + layout version so a later fold under
     # a drifted config refuses instead of merging incompatible summaries
     scheme, sep, _ = base_path.partition("://")
     if not sep or scheme == "file":
-        _write_store_meta(base_path, cfg, num_buckets)
+        _write_store_meta(base_path, cfg)
 
 
 def _journal_dir(base_path: str) -> str:
@@ -123,15 +123,11 @@ def _store_meta_path(base_path: str):
     return Path(base_path) / "_store_meta.json"
 
 
-def _write_store_meta(base_path: str, cfg: DedupConfig, num_buckets: int | None) -> None:
-    import json
-
-    meta = {
-        "store_version": STORE_VERSION,
-        "config_hash": cfg.config_hash(),
-        "num_buckets": num_buckets,
-    }
-    _store_meta_path(base_path).write_text(json.dumps(meta, sort_keys=True))
+def _write_store_meta(base_path: str, cfg: DedupConfig) -> None:
+    commit_json(
+        _store_meta_path(base_path),
+        {"store_version": STORE_VERSION, "config_hash": cfg.config_hash()},
+    )
 
 
 def _check_store_meta(base_path: str, cfg: DedupConfig) -> None:
@@ -149,7 +145,7 @@ def _check_store_meta(base_path: str, cfg: DedupConfig) -> None:
 
     p = _store_meta_path(base_path)
     if not p.exists():
-        _write_store_meta(base_path, cfg, None)
+        _write_store_meta(base_path, cfg)
         return
     try:
         meta = json.loads(p.read_text())
@@ -327,9 +323,9 @@ def fold_history(
     """Fold one batch's state forward WITHOUT rewriting the signature
     history (the O(batch) fold the ingest loop uses):
 
-    * signatures — APPENDED to the bucketed table (bucketBy append adds new
-      files per bucket; co-location for later verify joins is preserved —
-      ``tests/test_store.py`` plan contract)
+    * signatures — APPENDED to the bucketed table (``save_bucketed`` adds
+      at most one file per bucket; co-location for later verify joins is
+      preserved — ``tests/test_store.py`` plan contract)
     * band-bucket summaries — merged sketch-style via
       ``lsh.merge_bucket_summaries`` (old summaries + the batch's band rows
       only; the historical band rows are never re-scanned) and rewritten —
@@ -367,7 +363,6 @@ def fold_history(
     tables over the live store.  A pending journal for THIS same batch
     (replay after a crash) is simply completed and the fold returns.
     """
-    import json
     import shutil
     from pathlib import Path
 
@@ -401,8 +396,7 @@ def fold_history(
             "overwrite"
         ).parquet(f"{journal}/assignments")
         merges.write.mode("overwrite").parquet(f"{journal}/merges")
-        marker = Path(journal) / "marker.json"
-        marker.write_text(json.dumps(batch_fingerprint(new_sigs)))
+        commit_json(Path(journal) / "marker.json", batch_fingerprint(new_sigs))
         _fold_steps(spark, cfg, base_path, table_prefix, _fail_after)
 
 
@@ -442,11 +436,7 @@ def _fold_steps(
 
     # how many buckets the existing tables use is a layout constant of the
     # store; read it from the catalog rather than trusting a parameter
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table_prefix}_signatures").collect()
-    nb = 64
-    for r in desc:
-        if r["col_name"] == "Num Buckets":
-            nb = int(r["data_type"])
+    nb = bucket_count(spark, f"{table_prefix}_signatures")
 
     # -- step 1: signature append (idempotent via presence check) ----------
     if not _flag_path(base_path, "sig_done").exists():
@@ -454,13 +444,9 @@ def _fold_steps(
         batch_n = sigs.count()
         present = store.join(sigs.select("clip_id"), "clip_id", "left_semi").count()
         if present == 0:
-            (
-                sigs.write.mode("append")
-                .bucketBy(nb, "clip_id")
-                .sortBy("clip_id")
-                .option("path", f"{base_path}/signatures")
-                .format("parquet")
-                .saveAsTable(f"{table_prefix}_signatures")
+            save_bucketed(
+                sigs, f"{table_prefix}_signatures", f"{base_path}/signatures",
+                "clip_id", nb, mode="append",
             )
             # the append may run on a CLONED session (streaming foreachBatch
             # clones the SparkSession per micro-batch), which refreshes only
@@ -489,14 +475,9 @@ def _fold_steps(
         ).write.mode("overwrite").parquet(staged_buckets)
     fail_point("buckets_staged")
     if not _flag_path(base_path, "buckets_done").exists():
-        (
-            spark.read.parquet(staged_buckets)
-            .write.mode("overwrite")
-            .bucketBy(nb, "band_key")
-            .sortBy("band_key")
-            .option("path", f"{base_path}/band_buckets")
-            .format("parquet")
-            .saveAsTable(f"{table_prefix}_band_buckets")
+        save_bucketed(
+            spark.read.parquet(staged_buckets), f"{table_prefix}_band_buckets",
+            f"{base_path}/band_buckets", "band_key", nb,
         )
         spark.catalog.refreshTable(f"{table_prefix}_band_buckets")
         _flag_path(base_path, "buckets_done").touch()
@@ -525,14 +506,9 @@ def _fold_steps(
         )
     fail_point("clusters_staged")
     if not _flag_path(base_path, "clusters_done").exists():
-        (
-            spark.read.parquet(staged_clusters)
-            .write.mode("overwrite")
-            .bucketBy(nb, "clip_id")
-            .sortBy("clip_id")
-            .option("path", f"{base_path}/clusters")
-            .format("parquet")
-            .saveAsTable(f"{table_prefix}_clusters")
+        save_bucketed(
+            spark.read.parquet(staged_clusters), f"{table_prefix}_clusters",
+            f"{base_path}/clusters", "clip_id", nb,
         )
         spark.catalog.refreshTable(f"{table_prefix}_clusters")
         _flag_path(base_path, "clusters_done").touch()
@@ -619,15 +595,25 @@ def incremental_dedup(
         .localCheckpoint()
     )
 
-    all_sigs = new_sigs.unionByName(stored_sigs)
+    # verify reads only the endpoints' signatures: one semi join scans the
+    # store against the pairs' ids, unioned with the batch and materialized,
+    # so verify's per-pair joins read this small frame and never the store;
+    # the exact count lets verify broadcast it when it fits
+    endpoints = pairs.select(F.col("a").alias("clip_id")).unionByName(
+        pairs.select(F.col("b").alias("clip_id"))
+    )
+    endpoint_sigs = new_sigs.unionByName(
+        stored_sigs.join(endpoints, "clip_id", "left_semi")
+    ).localCheckpoint()
     transcripts = new_clips.select("clip_id", "transcript")
     if old_transcripts is not None:
         transcripts = transcripts.unionByName(
             old_transcripts.select("clip_id", "transcript")
         )
-    verified = verify_pairs(pairs, all_sigs, cfg, transcripts=transcripts).filter(
-        F.col("is_dup")
-    ).localCheckpoint()
+    verified = verify_pairs(
+        pairs, endpoint_sigs, cfg, transcripts=transcripts,
+        n_signatures=endpoint_sigs.count(),
+    ).filter(F.col("is_dup")).localCheckpoint()
 
     # project old endpoints onto their CLUSTER ids: union-find runs over
     # {new clip ids} ∪ {touched old cluster ids} — never over history rows

@@ -330,10 +330,9 @@ def word_ngram_hash_sets(
 def simhash_combo_keys_np(sim: np.ndarray, max_hamming: int) -> np.ndarray:
     """(n,) int64 simhash fingerprints → (n, C(h+3,3)) int64 Manku combo
     keys, vectorized (the numpy twin of the codegen
-    ``textops.dedup._simhash_combo_keys`` — same key values, computed inside
-    the Arrow pass so the query plan never carries a C(h+3,3)-expression
-    projection; at h=6 that is 84 expressions whose codegen compile dwarfs
-    the data time at bench scale)."""
+    ``textops.dedup.simhash_combo_key_array`` — same key values, computed
+    inside the Arrow pass so the query plan never carries a C(h+3,3)-key
+    projection at all)."""
     from itertools import combinations
 
     if not (1 <= max_hamming <= 13):

@@ -39,6 +39,7 @@ from datasketches_pig_spark.operators.lsh import candidate_pairs
 from datasketches_pig_spark.operators.stages import signature_stage
 from datasketches_pig_spark.operators.unionfind import connected_components
 from datasketches_pig_spark.operators.verify import verify_pairs
+from datasketches_pig_spark.store import commit_json
 
 @dataclass
 class RunResult:
@@ -93,20 +94,14 @@ class CheckpointStore:
         }
         self.manifest["stages"][stage] = {"path": path, "lineage": lineage}
         os.makedirs(self.run_dir, exist_ok=True)
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.manifest, f, indent=2)
-        os.replace(tmp, self.manifest_path)  # atomic commit record
+        commit_json(self.manifest_path, self.manifest)
         return out
 
     def annotate(self, stage: str, lineage: dict) -> None:
         """Re-commit a completed stage's manifest entry with post-save
         metrics (signature/band metrics land after the stage is written)."""
         self.manifest["stages"][stage]["lineage"] = lineage
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.manifest, f, indent=2)
-        os.replace(tmp, self.manifest_path)
+        commit_json(self.manifest_path, self.manifest)
 
 
 def run_pipeline(

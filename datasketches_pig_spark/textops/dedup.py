@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame
 from datasketches_pig_spark.operators.signatures import (
     band_hashes,
     minhash_signatures,
-    simhash64,
     word_ngram_hash_sets,
 )
 
@@ -179,9 +178,7 @@ def ngram_jaccard_pairs(
     )
 
 
-MINHASH_SCHEMA = (
-    "id long, bands array<long>, simhash long, n_shingles int, kmv array<long>"
-)
+MINHASH_SCHEMA = "id long, bands array<long>, n_shingles int, kmv array<long>"
 
 
 def minhash_stage(
@@ -196,7 +193,7 @@ def minhash_stage(
     rows_per_band: int = 4,
     kmv_prefix: int = 64,
 ) -> DataFrame:
-    """(id, bands, simhash, n_shingles, kmv) via the flat-array shingle
+    """(id, bands, n_shingles, kmv) via the flat-array shingle
     kernel (``word_ngram_hash_sets``: batch tokenize → token murmur →
     window-of-token-hashes gram murmur → one lexsort dedup) — one Arrow
     pass, no shuffle, no per-doc Python loop.  Docs with < n tokens shingle
@@ -210,7 +207,8 @@ def minhash_stage(
     per-doc segments come out of the kernel already uint64-sorted, so the
     prefix is a zero-cost slice).  ``n_shingles`` stays the EXACT distinct
     gram count; together they power the prefix-verify prefilter in
-    ``minhash_dedup_pairs``."""
+    ``minhash_dedup_pairs`` (``kmv_prefix=0`` emits empty ``kmv`` arrays
+    for the route that runs no prefilter)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -221,7 +219,6 @@ def minhash_stage(
             )
             mh = minhash_signatures(concat, counts, num_perm, seed)
             bh = band_hashes(mh, band_count, rows_per_band, seed)
-            sh = simhash64(concat, counts)
             # bottom-kmv_prefix per doc: segments are already sorted uint64
             starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
             within = np.arange(len(concat), dtype=np.int64) - np.repeat(
@@ -234,7 +231,6 @@ def minhash_stage(
                 {
                     "id": pdf[id_col].astype("int64"),
                     "bands": list(bh.view(np.int64)),
-                    "simhash": sh,
                     "n_shingles": counts.astype(np.int32),
                     "kmv": [
                         kflat[offs[i] : offs[i + 1]] for i in range(len(pdf))
@@ -380,7 +376,7 @@ def minhash_dedup_pairs(
 
     sigs = minhash_stage(
         df, id_col, text_col, n, num_perm, seed, char_fallback_n,
-        kmv_prefix=p if screen else 64,
+        kmv_prefix=p if screen else 0,
     )
     exact_prefix = None
     if screen:
@@ -627,36 +623,14 @@ def _simhash_blocks(max_hamming: int) -> tuple[tuple[int, ...], tuple[int, ...]]
     return bits, offs
 
 
-def _simhash_combo_keys(sim_col, max_hamming: int = 3):
-    """choose(h+3, 3) combo-key expressions over a 64-bit simhash column;
-    each key packs three block values plus the combo index (key ranges are
-    disjoint across combos)."""
-    from itertools import combinations
-
-    bits, offs = _simhash_blocks(max_hamming)
-    key_bits = 3 * max(bits)
-    keys = []
-    for idx, combo in enumerate(combinations(range(len(bits)), 3)):
-        key = F.lit(0).cast("long")
-        shift = 0
-        for b in combo:
-            blk = F.shiftright(sim_col, offs[b]).bitwiseAND(
-                F.lit((1 << bits[b]) - 1)
-            )
-            key = key + F.shiftleft(blk, shift)
-            shift += bits[b]
-        keys.append(key + F.shiftleft(F.lit(idx).cast("long"), key_bits + 1))
-    return keys
-
-
 def simhash_combo_key_array(sim_col, max_hamming: int = 3):
     """The C(h+3,3) Manku combo keys as ONE ``transform`` over a literal
     array of bit-packed combo specs — a single small expression tree whose
     lambda codegen-compiles once, instead of C(h+3,3) separate shift/mask
     expression trees (at h=4 that is 35 trees, a measurable per-session
     whole-stage-codegen compile tax — CLAUDE.md landmine #10; key VALUES are
-    identical to ``_simhash_combo_keys``/``simhash_combo_keys_np``,
-    parity-tested in tests/test_signatures.py).
+    identical to the numpy ``simhash_combo_keys_np``, parity-tested in
+    tests/test_signatures.py).
 
     Packing per combo (one int64): block offsets o1..o3 (6 bits each),
     block widths w1..w3 (5 bits each), accumulated shifts s2, s3 (6 bits

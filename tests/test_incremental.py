@@ -118,6 +118,51 @@ def test_incremental_rejects_reingested_ids(spark, split_corpus):
         )
 
 
+def test_incremental_verify_reads_endpoint_signatures_only(
+    spark, split_corpus, tmp_path_factory, monkeypatch
+):
+    """Verify runs against the batch plus only the stored signatures of the
+    pairs' endpoints; its verified frame equals verifying the same pairs
+    against the batch ∪ the whole store, row for row."""
+    from datasketches_pig_spark import incremental
+    from datasketches_pig_spark.operators.stages import signature_stage
+
+    day1, day2, _ = split_corpus
+    cfg = DedupConfig()
+    for t in ("signatures", "band_buckets", "clusters"):
+        spark.sql(f"DROP TABLE IF EXISTS incep_{t}")
+    sigs1 = signature_stage(day1, cfg).localCheckpoint()
+    singletons = sigs1.select("clip_id", F.col("clip_id").alias("cluster_id"))
+    base = str(tmp_path_factory.mktemp("incep"))
+    save_history(spark, sigs1, singletons, cfg, base, "incep", num_buckets=8)
+
+    seen = {}
+    real_verify = incremental.verify_pairs
+
+    def spy(pairs, signatures, cfg, **kw):
+        seen.update(pairs=pairs, signatures=signatures, kw=kw)
+        return real_verify(pairs, signatures, cfg, **kw)
+
+    monkeypatch.setattr(incremental, "verify_pairs", spy)
+    inc = incremental_dedup(
+        spark, day2, cfg, "incep",
+        old_transcripts=day1.select("clip_id", "transcript"),
+    )
+    whole = inc.new_sigs.unionByName(spark.table("incep_signatures"))
+    old_form = real_verify(
+        seen["pairs"], whole, cfg, transcripts=seen["kw"]["transcripts"]
+    ).filter(F.col("is_dup"))
+
+    key = ["a", "b"]
+    got = inc.verified.toPandas().sort_values(key).reset_index(drop=True)
+    want = old_form.toPandas().sort_values(key).reset_index(drop=True)
+    assert len(got) > 0
+    assert got.equals(want)
+    # the endpoint frame holds the batch plus old endpoints, not the store
+    n_batch = inc.new_sigs.count()
+    assert n_batch < seen["signatures"].count() < whole.count()
+
+
 def test_band_store_join_colocated(spark, split_corpus):
     """The new-batch band join against the persisted bucket store must not
     shuffle the store side (bucketed by band_key)."""

@@ -245,17 +245,13 @@ def test_fingerprint_batch_matches_scalar_spec():
 
 
 def test_simhash_combo_keys_np_matches_codegen(spark):
-    """The Arrow-pass numpy combo keys must equal both codegen expression
-    forms bit for bit — the per-combo trees and the packed-literal
-    ``transform`` array (all remain in the tree; the banding guarantee
-    rests on identical key values)."""
+    """The Arrow-pass numpy combo keys must equal the codegen packed-literal
+    ``transform`` array bit for bit (the banding guarantee rests on
+    identical key values)."""
     import pyspark.sql.functions as F
 
     from datasketches_pig_spark.operators.signatures import simhash_combo_keys_np
-    from datasketches_pig_spark.textops.dedup import (
-        _simhash_combo_keys,
-        simhash_combo_key_array,
-    )
+    from datasketches_pig_spark.textops.dedup import simhash_combo_key_array
 
     rng = np.random.RandomState(7)
     sims = rng.randint(-(2**63), 2**63 - 1, size=100, dtype=np.int64)
@@ -264,12 +260,6 @@ def test_simhash_combo_keys_np_matches_codegen(spark):
     )
     for h in (3, 4, 6):
         want = simhash_combo_keys_np(sims, h)
-        got_sql = np.array(
-            df.orderBy("row").select(
-                F.array(*_simhash_combo_keys(F.col("simhash"), h)).alias("k")
-            ).toPandas()["k"].tolist()
-        )
-        assert np.array_equal(got_sql, want), h
         exploded = (
             df.select(
                 "row",
