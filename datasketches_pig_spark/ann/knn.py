@@ -237,14 +237,14 @@ def embedding_near_pairs(
     the fifth dedup modality next to exact / n-gram / MinHash / SimHash.
 
     ``method='rhp'`` (the 100 TB path): 64-bit random-hyperplane signatures
-    (one Arrow pass), then exactly the SimHash near-dup machinery — Manku
-    3-of-(h+3)-block band keys, salted bucket expansion with hot-bucket
-    star-links — and an exact-cosine verify on candidates only (JVM
-    ``aggregate``/``zip_with``, no Python).  P[sig bit differs] = angle/π, so
-    a near-dup pair (cosine ≥ ~0.995, angle ≤ ~6°) has expected signature
-    Hamming ≈ 64·angle/π ≤ 1.2 and lands within ``max_hamming`` w.h.p.;
-    recall is asserted on a planted corpus in tests.  Same recall contract as
-    ``simhash_near_pairs``: complete while no band bucket exceeds
+    (one Arrow pass), Manku 3-of-(h+3)-block combo keys, the shared
+    ``operators.lsh.lsh_candidates`` path (salted bucket expansion with
+    hot-bucket star-links), then an exact-cosine verify on candidates only
+    (JVM ``aggregate``/``zip_with``, no Python; no Hamming filter).
+    P[sig bit differs] = angle/π, so a near-dup pair (cosine ≥ ~0.995,
+    angle ≤ ~6°) has expected signature Hamming ≈ 64·angle/π ≤ 1.2 and
+    lands within ``max_hamming`` w.h.p.; recall is asserted on a planted corpus in tests.  Recall contract of
+    ``lsh_candidates``: complete while no band bucket exceeds
     ``bucket_cap``, approximate above it.
 
     ``method='exact'``: the labeled O(n²) brute-force baseline (the oracle
@@ -255,41 +255,26 @@ def embedding_near_pairs(
         F.col(vec_col).alias("vec"),
         _norm(F.col(vec_col)).alias("nrm"),
     )
+    ca = c.select(
+        F.col("id").alias("a"), F.col("vec").alias("va"), F.col("nrm").alias("na")
+    )
+    cb = c.select(
+        F.col("id").alias("b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb")
+    )
     if method == "exact":
-        ca = c.select(
-            F.col("id").alias("a"), F.col("vec").alias("va"), F.col("nrm").alias("na")
-        )
-        cb = c.select(
-            F.col("id").alias("b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb")
-        )
         pairs = ca.join(cb, F.col("a") < F.col("b"))
     elif method == "rhp":
         from datasketches_pig_spark.operators.lsh import (
-            bucket_pairs,
-            release_shard_caches,
+            lsh_candidates,
+            simhash_combo_key_array,
         )
-        from datasketches_pig_spark.textops.dedup import simhash_combo_key_array
 
         if dim is None:
             dim = len(corpus.select(vec_col).first()[0])
-        release_shard_caches()  # previous operator's expansion cache, if any
         planes = make_hyperplanes(dim, n_bits=64, seed=seed)
         sigs = rhp_signature_df(corpus, id_col, vec_col, planes).localCheckpoint()
-        # combo keys as ONE transform expression (not C(h+3,3) codegen'd
-        # trees); candidates stay lazy — single consumer is the verify join
-        keys = sigs.select(
-            "id",
-            F.explode(simhash_combo_key_array(F.col("rhp_sig"), max_hamming)).alias(
-                "ckey"
-            ),
-        )
-        cand = bucket_pairs(keys, "ckey", "id", cap=bucket_cap).distinct()
-        ca = c.select(
-            F.col("id").alias("a"), F.col("vec").alias("va"), F.col("nrm").alias("na")
-        )
-        cb = c.select(
-            F.col("id").alias("b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb")
-        )
+        keys = simhash_combo_key_array(F.col("rhp_sig"), max_hamming)
+        cand = lsh_candidates(sigs, keys, bucket_cap)
         pairs = cand.join(ca, "a").join(cb, "b")
     else:
         raise ValueError(f"embedding_near_pairs: unknown method {method!r}")
@@ -497,9 +482,10 @@ def ivf_probe(
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    # no pair dedup needed, as in ivf_topk: ivf_build writes each vector to
+    # one list and a query's probed centroids are distinct
     return (
-        scored.groupBy("query_id", "vec_id").agg(F.max("cosine").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine", "rank")
     )

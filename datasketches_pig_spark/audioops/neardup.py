@@ -4,11 +4,12 @@
 Scale shape (identical to the clip pipeline's, minus the text modality):
 one fused Arrow pass per partition decodes payloads and emits only
 fixed-size artifacts (band keys + bottom-k KMV sketch) — raw audio bytes
-and PCM never cross a shuffle boundary; candidates come from the shared
-salted bucket expansion (`operators/lsh.bucket_pairs`, hot buckets
-star-linked, bounded reducer state); the verify join ships the KMV arrays
-only for candidate ids (a semi-joined fraction of the corpus) and computes
-Jaccard JVM-side with array algebra — no Python in the verify path.
+and PCM never cross a shuffle boundary; candidates come from the one LSH
+candidate path of the near-dup operators (`operators/lsh.lsh_candidates`:
+salted bucket expansion, hot buckets star-linked, bounded reducer state);
+the verify join ships the KMV arrays only for candidate ids (a semi-joined
+fraction of the corpus) and computes Jaccard JVM-side with array algebra —
+no Python in the verify path.
 
 Jaccard from bottom-k sketches is the engine-wide contract: EXACT whenever
 a clip's distinct-shingle count is below ``cfg.kmv_k`` (which is what makes
@@ -126,19 +127,10 @@ def audio_near_pairs(
     banding curve ``1-(1-j^r)^b`` — near 1 for j ≫ the band midpoint; use
     ``audio_exact_pairs`` when a corpus needs deterministic completeness."""
     cfg = cfg or DedupConfig()
-    from datasketches_pig_spark.operators.lsh import (
-        bucket_pairs,
-        release_shard_caches,
-    )
+    from datasketches_pig_spark.operators.lsh import lsh_candidates
 
-    release_shard_caches()  # previous operator's expansion cache, if any
     sigs = audio_signature_frame(clips, cfg, id_col).localCheckpoint()
-    # candidates stay lazy — their single consumer is the verify join below
-    # (r8: one fewer barrier); exchanges run at the session's shuffle width
-    chunks = sigs.filter(F.col("n") > 0).select(
-        "id", F.explode("bands").alias("band_key")
-    )
-    cand = bucket_pairs(chunks, "band_key", "id", cap=bucket_cap).distinct()
+    cand = lsh_candidates(sigs.filter(F.col("n") > 0), F.col("bands"), bucket_cap)
 
     sa = sigs.select(
         F.col("id").alias("a"), F.col("kmv").alias("ka"), F.col("n").alias("na")

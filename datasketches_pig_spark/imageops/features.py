@@ -56,42 +56,19 @@ def image_feature_stage(images: DataFrame) -> DataFrame:
 def image_near_pairs(
     images: DataFrame, max_hamming: int = 3, bucket_cap: int = 256
 ) -> DataFrame:
-    """Near-duplicate image pairs via dHash + the Manku banded join
-    (identical machinery to ``textops.dedup.simhash_near_pairs``): complete
-    for Hamming ≤ max_hamming while no band bucket exceeds the cap, JVM-side
-    ``bit_count(xor)`` verify.
-
-    r8 shape: the C(h+3,3) combo keys are ONE ``transform`` expression
-    (``simhash_combo_key_array`` — not 35 codegen'd trees at h=4); the
-    candidate frame stays LAZY (its single consumer is the final join, so
-    the former distinct+localCheckpoint barrier bought nothing — shard
-    caches are released at operator start instead, the residue rule
-    ``operators/lsh.py`` documents); expansion exchanges run at the
-    session's shuffle width."""
+    """Near-duplicate image pairs via dHash + the Manku banded join: the
+    shared ``operators.lsh.hamming_near_pairs`` candidate path (complete
+    for Hamming ≤ max_hamming while no band bucket exceeds the cap,
+    JVM-side ``bit_count(xor)`` verify).  The C(h+3,3) combo keys are ONE
+    ``transform`` expression (``simhash_combo_key_array`` — not 35
+    codegen'd trees at h=4)."""
     from datasketches_pig_spark.operators.lsh import (
-        bucket_pairs,
-        release_shard_caches,
+        hamming_near_pairs,
+        simhash_combo_key_array,
     )
-    from datasketches_pig_spark.textops.dedup import simhash_combo_key_array
 
-    release_shard_caches()  # previous operator's expansion cache, if any
     sigs = image_feature_stage(images).select(
         F.col("image_id").alias("id"), F.col("dhash").alias("simhash")
     ).localCheckpoint()
-    chunks = sigs.select(
-        "id",
-        F.explode(simhash_combo_key_array(F.col("simhash"), max_hamming)).alias(
-            "ckey"
-        ),
-    )
-    cand = bucket_pairs(chunks, "ckey", "id", cap=bucket_cap).distinct()
-    sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("ha"))
-    sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("hb"))
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
+    keys = simhash_combo_key_array(F.col("simhash"), max_hamming)
+    return hamming_near_pairs(sigs, keys, max_hamming, bucket_cap)

@@ -36,11 +36,11 @@ SALT_SHARDS = 16
 # upstream Arrow signature lineage — CLAUDE.md landmine #6) but the pairs
 # frame is returned lazily, so the cache cannot be dropped inside the
 # operator without forcing eager evaluation of a potentially huge pre-
-# distinct pair stream.  NOTE a single query may call _salted_pairs more
-# than once before consuming anything, so the release is NOT automatic here;
-# top-level operators call release_shard_caches() once their candidates are
-# materialized (or at their own start, bounding a long-lived session's
-# residue to the last query's caches).
+# distinct pair stream.  ``lsh_candidates`` releases the previous query's
+# caches at its own start (bounding a long-lived session's residue to the
+# last query's caches); callers that materialize their candidates (pipeline,
+# incremental, minhash) release right after.  ``bucket_pairs`` never
+# releases: video's shard cache doubles as a cross-query cache.
 _SHARD_CACHES: list[DataFrame] = []
 
 
@@ -149,10 +149,128 @@ def _salted_pairs(keyed: DataFrame, key: str, cap: int) -> DataFrame:
 
 def bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:
     """Public form of the salted bucket-pair expansion for any (key, id)
-    frame — used by the document-dedup operators too.  Returns (a, b) with
-    a < b, not distinct."""
+    frame.  Returns (a, b) with a < b, not distinct, and leaves the shard
+    cache registered (``video_near_pairs`` counts the repeated pairs and
+    reuses the cache across queries)."""
     renamed = keyed.select(F.col(key), F.col(id_col).alias("clip_id"))
     return _salted_pairs(renamed, key, cap)
+
+
+def lsh_candidates(sigs: DataFrame, keys: Column, cap: int) -> DataFrame:
+    """(id, …) signature rows + an array-of-LSH-keys column → distinct
+    (a, b) candidate pairs with a < b: the one candidate step of the
+    near-dup operators (MinHash bands, Manku SimHash combos, audio bands).
+
+    Releases the previous query's shard caches first; this query's cache
+    stays registered until the caller materializes its candidates and
+    releases, or the next call here does (bounded residue) — so a query
+    that builds two candidate frames must materialize the first before
+    building the second, or the first recomputes its shards.  The frame
+    is lazy: its consumer is usually a single verify join, so no barrier.
+
+    Recall contract: complete while no key bucket exceeds ``cap``.  Keys are
+    64-bit hashes of whole bands / fingerprint blocks, so an over-cap bucket
+    means > cap rows agree on a full band — a mass-duplicate cluster, where
+    the salted expansion star-links and the downstream verify may drop
+    borderline (non-center) pairs; pair recall above the cap is approximate
+    (a missed pair must land over cap in every key it shares)."""
+    release_shard_caches()
+    keyed = sigs.select(
+        F.explode(keys).alias("lsh_key"), F.col("id").alias("clip_id")
+    )
+    return _salted_pairs(keyed, "lsh_key", cap).distinct()
+
+
+def hamming_near_pairs(
+    sigs: DataFrame, keys: Column, max_hamming: int, cap: int
+) -> DataFrame:
+    """(id, simhash, …) rows → (a, b, hamming) pairs within ``max_hamming``
+    bits: ``lsh_candidates`` over the Manku combo ``keys``, then the exact
+    JVM ``bit_count(xor)`` verify (never Python)."""
+    cand = lsh_candidates(sigs, keys, cap)
+    sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("sim_a"))
+    sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("sim_b"))
+    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    return (
+        cand.join(sa, "a")
+        .join(sb, "b")
+        .withColumn("hamming", ham)
+        .filter(F.col("hamming") <= max_hamming)
+        .select("a", "b", "hamming")
+    )
+
+
+# Manku-style block keys (WWW'07 near-duplicate detection).  For a Hamming
+# budget h, split the 64 bits into h+3 blocks; any pair within Hamming <= h
+# leaves >= 3 blocks untouched, so it shares at least one choose(h+3, 3)
+# concatenated 3-block key exactly.  h=3 → 6 blocks / 20 combos / ~32-bit
+# keys (the classic setting); larger h trades explode factor C(h+3,3) and
+# coarser keys for the wider guarantee.
+
+
+def _simhash_blocks(max_hamming: int) -> tuple[tuple[int, ...], tuple[int, ...]]:
+    if not (1 <= max_hamming <= 13):
+        raise ValueError(
+            f"simhash banding: max_hamming must be in [1, 13], got {max_hamming}"
+        )
+    n_blocks = max_hamming + 3
+    base, extra = divmod(64, n_blocks)
+    bits = tuple(base + (1 if i < extra else 0) for i in range(n_blocks))
+    offs = tuple(sum(bits[:i]) for i in range(n_blocks))
+    return bits, offs
+
+
+def simhash_combo_key_array(sim_col, max_hamming: int = 3):
+    """The C(h+3,3) Manku combo keys as ONE ``transform`` over a literal
+    array of bit-packed combo specs — a single small expression tree whose
+    lambda codegen-compiles once, instead of C(h+3,3) separate shift/mask
+    expression trees (at h=4 that is 35 trees, a measurable per-session
+    whole-stage-codegen compile tax); key VALUES are identical to the numpy
+    ``simhash_combo_keys_np``, parity-tested in tests/test_signatures.py.
+
+    Packing per combo (one int64): block offsets o1..o3 (6 bits each),
+    block widths w1..w3 (5 bits each), accumulated shifts s2, s3 (6 bits
+    each); the combo index comes from the transform lambda's position
+    argument."""
+    from itertools import combinations
+
+    bits, offs = _simhash_blocks(max_hamming)
+    key_bits = 3 * max(bits)
+    packed = []
+    for b1, b2, b3 in combinations(range(len(bits)), 3):
+        packed.append(
+            offs[b1]
+            | offs[b2] << 6
+            | offs[b3] << 12
+            | bits[b1] << 18
+            | bits[b2] << 23
+            | bits[b3] << 28
+            | bits[b1] << 33
+            | (bits[b1] + bits[b2]) << 39
+        )
+
+    def _field(c, shift, width):
+        return F.shiftright(c, shift).bitwiseAND(F.lit((1 << width) - 1)).cast("int")
+
+    def _blk(c, off_sh, w_sh):
+        o = _field(c, off_sh, 6)
+        w = _field(c, w_sh, 5)
+        mask = F.call_function("shiftleft", F.lit(1).cast("long"), w) - F.lit(1).cast(
+            "long"
+        )
+        return F.call_function("shiftright", sim_col, o).bitwiseAND(mask)
+
+    def _key(c, i):
+        s2 = _field(c, 33, 6)
+        s3 = _field(c, 39, 6)
+        key = (
+            _blk(c, 0, 18)
+            + F.call_function("shiftleft", _blk(c, 6, 23), s2)
+            + F.call_function("shiftleft", _blk(c, 12, 28), s3)
+        )
+        return key + F.shiftleft(i.cast("long"), key_bits + 1)
+
+    return F.transform(F.array(*[F.lit(p).cast("long") for p in packed]), _key)
 
 
 def bucket_summaries(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:

@@ -330,23 +330,17 @@ def word_ngram_hash_sets(
 def simhash_combo_keys_np(sim: np.ndarray, max_hamming: int) -> np.ndarray:
     """(n,) int64 simhash fingerprints → (n, C(h+3,3)) int64 Manku combo
     keys, vectorized (the numpy twin of the codegen
-    ``textops.dedup.simhash_combo_key_array`` — same key values, computed
+    ``operators.lsh.simhash_combo_key_array`` — same key values, computed
     inside the Arrow pass so the query plan never carries a C(h+3,3)-key
     projection at all)."""
     from itertools import combinations
 
-    if not (1 <= max_hamming <= 13):
-        raise ValueError(
-            f"simhash combo keys: max_hamming must be in [1, 13] "
-            f"(h+3 blocks over 64 bits; C(h+3,3) explode factor), got {max_hamming}"
-        )
-    n_blocks = max_hamming + 3
-    base, extra = divmod(64, n_blocks)
-    bits = tuple(base + (1 if i < extra else 0) for i in range(n_blocks))
-    offs = tuple(sum(bits[:i]) for i in range(n_blocks))
+    from datasketches_pig_spark.operators.lsh import _simhash_blocks
+
+    bits, offs = _simhash_blocks(max_hamming)
     key_bits = 3 * max(bits)
     s = np.asarray(sim, dtype=np.int64).view(U64)
-    combos = list(combinations(range(n_blocks), 3))
+    combos = list(combinations(range(len(bits)), 3))
     out = np.empty((len(s), len(combos)), dtype=U64)
     for idx, combo in enumerate(combos):
         key = np.zeros(len(s), dtype=U64)

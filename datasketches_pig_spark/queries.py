@@ -736,7 +736,7 @@ ORDER BY est DESC, item ASC LIMIT 10
 
 
 def q_reservoir_union(spark, sf_dir):
-    from datasketches_pig_spark.sketch.sampling import reservoir_union
+    from datasketches_pig_spark.sketch.sampling import reservoir_union_states
 
     cust = _t(spark, sf_dir, "customer")
     # per-nation partial reservoirs in exact mode (k ≫ rows per nation), then
@@ -745,7 +745,7 @@ def q_reservoir_union(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.collect_list(F.struct("c_custkey", "c_nationkey")).alias("samples"),
     )
-    merged = reservoir_union(partials, k=1000000)
+    merged = reservoir_union_states(partials, k=1000000)
     return merged.select("c_custkey", "c_nationkey")
 
 

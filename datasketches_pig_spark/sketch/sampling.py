@@ -63,40 +63,6 @@ def reservoir_sample(
     )
 
 
-def reservoir_union(
-    reservoirs: DataFrame,
-    k: int,
-    n_col: str = "n",
-    samples_col: str = "samples",
-    seed: int = 9001,
-) -> DataFrame:
-    """Merge partial reservoirs — the ``sampling.ReservoirUnion`` analog
-    (``pig/sampling/ReservoirUnion.java:48,73-81``).
-
-    Input: one row per partial reservoir, ``(n: long, samples: array<T>)``
-    where ``n`` is the population size the reservoir was drawn from.  Each
-    retained sample stands in for ``n / |samples|`` population rows, so the
-    merge is weighted sampling without replacement over all retained samples
-    (A-ExpJ: key = U^(1/w), keep top-k).  When the total retained count is
-    ≤ k the top-k keeps everything — the reference's exact-mode shortcut
-    falls out for free, and in exact mode (every n == |samples|) the merge
-    is exactly the union of the inputs.
-    """
-    if k < 2:
-        raise ValueError("reservoir k must be >= 2")
-    exploded = reservoirs.select(
-        F.col(n_col).alias("__n"),
-        F.size(samples_col).alias("__sz"),
-        F.explode(samples_col).alias("__s"),
-    )
-    keyed = exploded.withColumn(
-        "__key", F.pow(F.rand(seed), F.col("__sz").cast("double") / F.col("__n"))
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject: per-partition top-k,
-    # then a single k-row merge — no global sort, no single-partition window
-    return keyed.orderBy(F.desc("__key")).limit(k).select("__s.*")
-
-
 def reservoir_state(
     df: DataFrame,
     k: int,
@@ -136,6 +102,8 @@ def reservoir_union_states(
     over ``reservoir_state`` rows): weighted sampling without replacement
     (A-ExpJ keys) over all retained samples.  Exact mode (every state's
     n == |samples|) returns the union of the inputs — rows, not state.
+    With an explicit ``k`` any ``(n, samples)`` partials merge, persisted
+    or not: each sample stands in for ``n / |samples|`` population rows.
 
     ``k=None`` (mixed-k merge) reconciles states persisted with different
     ks the way the reference does: the merged reservoir uses the MINIMUM

@@ -241,27 +241,6 @@ def minhash_stage(
     return df.select(id_col, text_col).mapInPandas(run, schema=MINHASH_SCHEMA)
 
 
-def minhash_lsh_candidates(sigs: DataFrame, cap: int = 64) -> DataFrame:
-    """(a, b) candidate pairs from band-bucket equality — now a pure
-    relational explode of the precomputed band keys (whole-stage codegen, no
-    Python) feeding the salted single-shuffle bucket expansion.
-
-    Recall contract (same shape as ``simhash_near_pairs``): complete while no
-    band bucket exceeds the expansion cap.  Band keys are 64-bit hashes of
-    r=4 minhash rows, so an over-cap bucket means > cap docs agree on a full
-    band — a mass-duplicate cluster, where the salted expansion star-links
-    and the downstream Jaccard verify may drop borderline (non-center) pairs;
-    pair recall above the cap is approximate."""
-    bands = sigs.filter(F.col("n_shingles") > 0).select(
-        "id", F.explode("bands").alias("band_key")
-    )
-    # salted single-shuffle bucket expansion (same operator as the clip
-    # pipeline: hot buckets star-link, small buckets exact all-pairs)
-    from datasketches_pig_spark.operators.lsh import bucket_pairs
-
-    return bucket_pairs(bands, "band_key", "id", cap=cap).distinct()
-
-
 _PREFIX_REJECT_DELTA = 1e-12  # per-pair misroute probability of the KL reject
 
 
@@ -366,7 +345,10 @@ def minhash_dedup_pairs(
     routes produce identical pairs (parity test
     ``test_minhash_prefix_verify_parity``).  Both constants are read at
     call time, so tests and tools can set them."""
-    from datasketches_pig_spark.operators.lsh import release_shard_caches
+    from datasketches_pig_spark.operators.lsh import (
+        lsh_candidates,
+        release_shard_caches,
+    )
 
     p = PREFIX_SCREEN_HASHES
     min_mean = PREFIX_SCREEN_MIN_MEAN_SHINGLES
@@ -374,10 +356,12 @@ def minhash_dedup_pairs(
         _estimate_mean_shingles(df, text_col, n, char_fallback_n) >= min_mean
     )
 
+    # zero-shingle docs (empty/whitespace/null text) share every band and
+    # would pair as mutual near dups; they are the exact-dedup path's business
     sigs = minhash_stage(
         df, id_col, text_col, n, num_perm, seed, char_fallback_n,
         kmv_prefix=p if screen else 0,
-    )
+    ).filter(F.col("n_shingles") > 0)
     exact_prefix = None
     if screen:
         # two consumers (candidates + prefilter joins): materialize the slim
@@ -386,12 +370,11 @@ def minhash_dedup_pairs(
         # screen, whose own localCheckpoint materializes the whole chain in
         # one job (one fewer barrier than checkpointing candidates first)
         sigs = sigs.localCheckpoint()
-        cands = minhash_lsh_candidates(sigs)
+        cands = lsh_candidates(sigs, F.col("bands"), cap=64)
         cands, exact_prefix = _prefix_screen(cands, sigs, threshold, p)
-        release_shard_caches()  # screen is materialized; drop the shard cache
     else:
-        cands = minhash_lsh_candidates(sigs).localCheckpoint()
-        release_shard_caches()  # cands is materialized; drop the shard cache
+        cands = lsh_candidates(sigs, F.col("bands"), cap=64).localCheckpoint()
+    release_shard_caches()  # candidates are materialized; drop the shard cache
 
     cand_ids = (
         cands.select(F.col("a").alias(id_col))
@@ -603,80 +586,6 @@ def containment_dedup_pairs(
     )
 
 
-# Manku-style block keys (WWW'07 near-duplicate detection).  For a Hamming
-# budget h, split the 64 bits into h+3 blocks; any pair within Hamming <= h
-# leaves >= 3 blocks untouched, so it shares at least one choose(h+3, 3)
-# concatenated 3-block key exactly.  h=3 → 6 blocks / 20 combos / ~32-bit
-# keys (the classic setting); larger h trades explode factor C(h+3,3) and
-# coarser keys for the wider guarantee.
-
-
-def _simhash_blocks(max_hamming: int) -> tuple[tuple[int, ...], tuple[int, ...]]:
-    if not (1 <= max_hamming <= 13):
-        raise ValueError(
-            f"simhash banding: max_hamming must be in [1, 13], got {max_hamming}"
-        )
-    n_blocks = max_hamming + 3
-    base, extra = divmod(64, n_blocks)
-    bits = tuple(base + (1 if i < extra else 0) for i in range(n_blocks))
-    offs = tuple(sum(bits[:i]) for i in range(n_blocks))
-    return bits, offs
-
-
-def simhash_combo_key_array(sim_col, max_hamming: int = 3):
-    """The C(h+3,3) Manku combo keys as ONE ``transform`` over a literal
-    array of bit-packed combo specs — a single small expression tree whose
-    lambda codegen-compiles once, instead of C(h+3,3) separate shift/mask
-    expression trees (at h=4 that is 35 trees, a measurable per-session
-    whole-stage-codegen compile tax — CLAUDE.md landmine #10; key VALUES are
-    identical to the numpy ``simhash_combo_keys_np``, parity-tested in
-    tests/test_signatures.py).
-
-    Packing per combo (one int64): block offsets o1..o3 (6 bits each),
-    block widths w1..w3 (5 bits each), accumulated shifts s2, s3 (6 bits
-    each); the combo index comes from the transform lambda's position
-    argument."""
-    from itertools import combinations
-
-    bits, offs = _simhash_blocks(max_hamming)
-    key_bits = 3 * max(bits)
-    packed = []
-    for b1, b2, b3 in combinations(range(len(bits)), 3):
-        packed.append(
-            offs[b1]
-            | offs[b2] << 6
-            | offs[b3] << 12
-            | bits[b1] << 18
-            | bits[b2] << 23
-            | bits[b3] << 28
-            | bits[b1] << 33
-            | (bits[b1] + bits[b2]) << 39
-        )
-
-    def _field(c, shift, width):
-        return F.shiftright(c, shift).bitwiseAND(F.lit((1 << width) - 1)).cast("int")
-
-    def _blk(c, off_sh, w_sh):
-        o = _field(c, off_sh, 6)
-        w = _field(c, w_sh, 5)
-        mask = F.call_function("shiftleft", F.lit(1).cast("long"), w) - F.lit(1).cast(
-            "long"
-        )
-        return F.call_function("shiftright", sim_col, o).bitwiseAND(mask)
-
-    def _key(c, i):
-        s2 = _field(c, 33, 6)
-        s3 = _field(c, 39, 6)
-        key = (
-            _blk(c, 0, 18)
-            + F.call_function("shiftleft", _blk(c, 6, 23), s2)
-            + F.call_function("shiftleft", _blk(c, 12, 28), s3)
-        )
-        return key + F.shiftleft(i.cast("long"), key_bits + 1)
-
-    return F.transform(F.array(*[F.lit(p).cast("long") for p in packed]), _key)
-
-
 def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
@@ -691,20 +600,17 @@ def simhash_near_pairs(
     keys (pigeonhole: Hamming ≤ h ⇒ some 3 blocks untouched ⇒ shared key),
     exact Hamming verify (codegen'd ``bit_count(xor)``, never Python).
 
-    Recall contract: complete while no (combo, key) bucket exceeds
-    ``bucket_cap``.  At h=3 keys are ~32 bits, so buckets are fine-grained —
-    an over-cap bucket means > cap docs agree on 33 fingerprint bits, i.e. a
-    mass-duplicate cluster; there the salted expansion degrades to star-links
-    and pair recall above the cap is approximate (a missed pair must land
-    over-cap in *every* one of its ≥ 1 shared combos).  Larger h widens the
-    guarantee but multiplies band rows by C(h+3,3) and coarsens keys; h ≤ 3
-    is the recommended 100 TB setting.
+    Recall contract (``operators.lsh.lsh_candidates``): complete while no
+    (combo, key) bucket exceeds ``bucket_cap``.  At h=3 keys are ~32 bits,
+    so an over-cap bucket means > cap docs agree on 33 fingerprint bits.
+    Larger h widens the guarantee but multiplies band rows by C(h+3,3) and
+    coarsens keys; h ≤ 3 is the recommended 100 TB setting.
 
     The C(h+3,3) combo keys are computed INSIDE the signature Arrow pass
     (``simhash_combo_keys_np``) and leave it as one array column — the plan
     explodes an array instead of evaluating (and codegen-compiling) 84
     shift/mask expressions per row at h=6."""
-    from datasketches_pig_spark.operators.lsh import bucket_pairs
+    from datasketches_pig_spark.operators.lsh import hamming_near_pairs
     from datasketches_pig_spark.operators.signatures import (
         simhash64,
         simhash_combo_keys_np,
@@ -713,7 +619,7 @@ def simhash_near_pairs(
 
     # zero-shingle docs (empty/whitespace/null text) all fingerprint to 0 and
     # would pair as mutual "near dups"; they are the exact-dedup path's
-    # business, same contract as minhash_lsh_candidates
+    # business, same contract as minhash_dedup_pairs
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             concat, counts = word_ngram_hash_sets(
@@ -730,9 +636,6 @@ def simhash_near_pairs(
                 }
             )
 
-    from datasketches_pig_spark.operators.lsh import release_shard_caches
-
-    release_shard_caches()  # previous operator's expansion cache, if any
     sigs = (
         df.select(id_col, text_col)
         .mapInPandas(
@@ -741,20 +644,4 @@ def simhash_near_pairs(
         .filter(F.col("n_shingles") > 0)
         .localCheckpoint()
     )
-    chunks = sigs.select("id", F.explode("ckeys").alias("ckey"))
-    # candidates stay LAZY (r8): their single consumer is the verify join
-    # below, so the former distinct+localCheckpoint barrier added a job and
-    # a materialization for nothing; the shard cache persists until the
-    # next operator's release-at-start (the residue rule operators/lsh.py
-    # documents)
-    cand = bucket_pairs(chunks, "ckey", "id", cap=bucket_cap).distinct()
-    sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("sim_a"))
-    sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("sim_b"))
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
+    return hamming_near_pairs(sigs, F.col("ckeys"), max_hamming, bucket_cap)

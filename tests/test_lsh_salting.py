@@ -3,6 +3,7 @@ pair count O(n) (star links), preserve connectivity, and keep exact all-pairs
 for small buckets."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.operators.lsh import candidate_pairs
@@ -107,17 +108,16 @@ def test_merge_bucket_summaries_semantics(spark):
 
 def test_shard_caches_released_after_dedup_query(spark):
     """Hygiene contract: _salted_pairs persists its shard frame (landmine:
-    two consumers must not re-run the Arrow lineage), and the operator
-    wrappers release that cache once candidates are materialized — a
-    long-lived session running many dedup queries must not accumulate
-    cached shard RDDs."""
+    two consumers must not re-run the Arrow lineage), and minhash releases
+    that cache once its candidates are materialized — a long-lived session
+    running many dedup queries must not accumulate cached shard RDDs."""
     import pandas as pd
 
-    from datasketches_pig_spark.operators.lsh import _SHARD_CACHES
-    from datasketches_pig_spark.textops.dedup import (
-        minhash_dedup_pairs,
-        simhash_near_pairs,
+    from datasketches_pig_spark.operators.lsh import (
+        _SHARD_CACHES,
+        release_shard_caches,
     )
+    from datasketches_pig_spark.textops.dedup import minhash_dedup_pairs
 
     docs = spark.createDataFrame(
         pd.DataFrame(
@@ -134,19 +134,121 @@ def test_shard_caches_released_after_dedup_query(spark):
             }
         )
     )
-    from datasketches_pig_spark.operators.lsh import release_shard_caches
-
     minhash_dedup_pairs(docs, "doc_id", "text", 3, 0.5).collect()
     assert not _SHARD_CACHES, "minhash left shard caches registered"
-    # r8 residue rule: operators whose candidate frame stays lazy (simhash,
-    # image/audio near-pairs) release the PREVIOUS operator's caches at
-    # their own start, so a session carries at most the last query's shard
-    # caches — bounded residue, not a leak (operators/lsh.py docstring)
-    simhash_near_pairs(docs, "doc_id", "text", 3, max_hamming=6).collect()
-    assert len(_SHARD_CACHES) <= 1, "more than the last query's caches left"
-    simhash_near_pairs(docs, "doc_id", "text", 3, max_hamming=6).collect()
-    assert len(_SHARD_CACHES) <= 1, "release-at-start did not bound residue"
-    # the explicit hygiene call clears the bounded residue
-    release_shard_caches()
-    assert not _SHARD_CACHES
+    # operators whose candidate frame stays lazy leave one query's caches:
+    # test_lsh_candidates_residue_bounded
     assert release_shard_caches() == 0
+
+
+def _simhash_op(spark):
+    from datasketches_pig_spark.textops.dedup import simhash_near_pairs
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 3} shares these few words here") for i in range(6)],
+        "doc_id long, text string",
+    )
+    return lambda: simhash_near_pairs(docs, "doc_id", "text", 3, max_hamming=6)
+
+
+def _image_op(spark):
+    from datasketches_pig_spark.data.images import synth_jpeg_frame
+    from datasketches_pig_spark.imageops.features import image_near_pairs
+
+    frames = synth_jpeg_frame(
+        spark.range(10).select(F.col("id").alias("doc_id"))
+    ).localCheckpoint()
+    return lambda: image_near_pairs(frames, max_hamming=4)
+
+
+def _audio_op(spark):
+    from datasketches_pig_spark.audioops.neardup import audio_near_pairs
+    from datasketches_pig_spark.data.audio import synth_adpcm_clip
+
+    clips = synth_adpcm_clip(
+        spark.range(10).select(F.col("id").alias("doc_id"))
+    ).localCheckpoint()
+    return lambda: audio_near_pairs(clips, threshold=0.5)
+
+
+def _embedding_rhp_op(spark):
+    from datasketches_pig_spark.ann.knn import embedding_near_pairs
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 2), 1.0, 0.5 * (i % 3)]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    return lambda: embedding_near_pairs(vecs, 0.9, method="rhp", dim=3)
+
+
+@pytest.mark.parametrize(
+    "make_op",
+    [_simhash_op, _image_op, _audio_op, _embedding_rhp_op],
+    ids=["simhash", "image", "audio", "embedding_rhp"],
+)
+def test_lsh_candidates_residue_bounded(spark, make_op):
+    """Every lazy-candidate near-dup operator builds its candidates through
+    ``lsh_candidates``, which releases the previous query's shard caches at
+    its start: back-to-back queries leave at most one query's caches."""
+    from datasketches_pig_spark.operators.lsh import (
+        _SHARD_CACHES,
+        release_shard_caches,
+    )
+
+    op = make_op(spark)
+    release_shard_caches()
+    op().collect()
+    assert len(_SHARD_CACHES) == 1, "candidates did not go through _salted_pairs"
+    op().collect()
+    assert len(_SHARD_CACHES) == 1, "release-at-start did not bound residue"
+    assert release_shard_caches() == 1
+
+
+def test_lsh_candidates_contract(spark):
+    """Distinct (a, b) with a < b, equal to the salted expansion of the
+    exploded keys deduplicated — including a key bucket above the cap."""
+    import random
+
+    from datasketches_pig_spark.operators.lsh import (
+        bucket_pairs,
+        lsh_candidates,
+        release_shard_caches,
+    )
+
+    rng = random.Random(3)
+    # 40 ids over 12 keys (several shared per id) + one hot key on 30 ids
+    rows = [
+        (i, rng.sample(range(12), 3) + ([99] if i < 30 else []))
+        for i in range(40)
+    ]
+    sigs = spark.createDataFrame(rows, "id long, keys array<long>")
+    cap = 8
+    got = lsh_candidates(sigs, F.col("keys"), cap).collect()
+    pairs = [(r["a"], r["b"]) for r in got]
+    assert pairs and all(a < b for a, b in pairs)
+    assert len(pairs) == len(set(pairs)), "duplicate candidate pairs"
+    exploded = sigs.select("id", F.explode("keys").alias("k"))
+    want = bucket_pairs(exploded, "k", "id", cap).distinct().collect()
+    assert set(pairs) == {(r["a"], r["b"]) for r in want}
+    release_shard_caches()
+
+
+def test_video_near_pairs_keeps_shard_cache(spark):
+    """``video_near_pairs`` does NOT release at start or after: its shard
+    cache is the cross-query cache repeated MJPEG dedup passes read."""
+    from datasketches_pig_spark.data.videos import synth_video_frame
+    from datasketches_pig_spark.operators.lsh import (
+        _SHARD_CACHES,
+        release_shard_caches,
+    )
+    from datasketches_pig_spark.videoops.frames import video_near_pairs
+
+    vids = synth_video_frame(
+        spark.range(10).select(F.col("id").alias("doc_id"))
+    ).localCheckpoint()
+    release_shard_caches()
+    video_near_pairs(vids, stride=1).collect()
+    assert len(_SHARD_CACHES) == 1, "video released its shard cache"
+    video_near_pairs(vids, stride=1).collect()
+    assert len(_SHARD_CACHES) == 2, "video released the previous query's cache"
+    assert release_shard_caches() == 2

@@ -218,7 +218,7 @@ def test_kernel_bad_args_raise():
         simhash_combo_keys_np,
         word_ngram_hash_sets,
     )
-    from datasketches_pig_spark.textops.dedup import _simhash_blocks
+    from datasketches_pig_spark.operators.lsh import _simhash_blocks
 
     sig = np.zeros((3, 64), dtype=np.uint64)
     with pytest.raises(ValueError, match="signature width"):

@@ -71,7 +71,7 @@ def test_manku_blocks_pigeonhole(base, h, flip_bits):
     3-block combo keys — pure-python replication of the key packing."""
     from itertools import combinations
 
-    from datasketches_pig_spark.textops.dedup import _simhash_blocks
+    from datasketches_pig_spark.operators.lsh import _simhash_blocks
 
     flips = list(flip_bits)[:h]
     other = base

@@ -251,7 +251,7 @@ def test_simhash_combo_keys_np_matches_codegen(spark):
     import pyspark.sql.functions as F
 
     from datasketches_pig_spark.operators.signatures import simhash_combo_keys_np
-    from datasketches_pig_spark.textops.dedup import simhash_combo_key_array
+    from datasketches_pig_spark.operators.lsh import simhash_combo_key_array
 
     rng = np.random.RandomState(7)
     sims = rng.randint(-(2**63), 2**63 - 1, size=100, dtype=np.int64)

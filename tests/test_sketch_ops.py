@@ -173,7 +173,7 @@ def test_hll_bounds_cover_truth(spark):
 def test_reservoir_union_exact_and_sampled(spark):
     import pyspark.sql.functions as F
 
-    from datasketches_pig_spark.sketch.sampling import reservoir_union
+    from datasketches_pig_spark.sketch.sampling import reservoir_union_states
 
     df = spark.range(200).withColumn("g", (F.col("id") % 4).cast("int"))
     partials = df.groupBy("g").agg(
@@ -181,17 +181,17 @@ def test_reservoir_union_exact_and_sampled(spark):
         F.collect_list(F.struct("id", "g")).alias("samples"),
     )
     # exact mode: k >= total retained -> union returns everything
-    exact = reservoir_union(partials, k=1000).toPandas()
+    exact = reservoir_union_states(partials, k=1000).toPandas()
     assert sorted(exact["id"]) == list(range(200))
     # sampled mode: exactly k rows, all drawn from the retained samples
-    sampled = reservoir_union(partials, k=50).toPandas()
+    sampled = reservoir_union_states(partials, k=50).toPandas()
     assert len(sampled) == 50
     assert sampled["id"].is_unique and set(sampled["id"]) <= set(range(200))
     # ReservoirSampling.java:63-70 k>=2 rule
     import pytest
 
     with pytest.raises(ValueError):
-        reservoir_union(partials, k=1)
+        reservoir_union_states(partials, k=1)
 
 
 def test_grouped_varopt_bounded_hot_group(spark):

@@ -248,7 +248,9 @@ def test_ann_high_dim_256(spark, tmp_path):
     idx = str(tmp_path / "ivf")
     ivf_build(corpus, idx, n_centroids=6)
     probed = ivf_probe(spark, idx, queries, k=5, n_probe=2)
-    pt = {(r.query_id, r.vec_id) for r in probed.collect()}
+    probed_rows = probed.collect()
+    pt = {(r.query_id, r.vec_id) for r in probed_rows}
+    assert len(pt) == len(probed_rows)  # each (query, vector) pair once
     assert len(bt & pt) / len(bt) >= 0.9
     # partition pruning: the physical plan must carry a PartitionFilters
     # predicate on centroid_id (hive-partitioned lists directory)
