@@ -19,7 +19,10 @@ import re
 import numpy as np
 
 from datasketches_pig_spark.config import DedupConfig
-from datasketches_pig_spark.functions.murmur3 import murmur3_x64_128_fixed
+from datasketches_pig_spark.functions.murmur3 import (
+    murmur3_x64_128,
+    murmur3_x64_128_fixed,
+)
 
 _WS = re.compile(r"\s+")
 
@@ -64,8 +67,6 @@ def text_shingle_hashes(
             if c:
                 out[i] = np.unique(h1[pos : pos + c])
                 pos += c
-    from datasketches_pig_spark.functions.murmur3 import murmur3_x64_128
-
     for i, b in short:
         out[i] = np.array([murmur3_x64_128(b, cfg.seed)[0]], dtype=np.uint64)
     return out
@@ -74,6 +75,15 @@ def text_shingle_hashes(
 # ---------------------------------------------------------------------------
 # audio feature stream
 # ---------------------------------------------------------------------------
+
+def frame_energy(pcm: np.ndarray, frame: int, hop: int) -> np.ndarray:
+    """Mean-square energy (float64) of each ``frame``-sample window at stride
+    ``hop`` (``len(pcm) >= frame``), without gathering the windows: the
+    strided view hands ``mean`` the same values in the same order as a
+    gathered (n_frames × frame) row, so the result is bit-identical to it."""
+    sq = pcm.astype(np.float64) ** 2
+    return np.lib.stride_tricks.sliding_window_view(sq, frame)[::hop].mean(axis=1)
+
 
 def frame_symbols(pcm: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndarray:
     """PCM float32 → uint8 symbol stream (one symbol per 10 ms frame).
@@ -86,6 +96,13 @@ def frame_symbols(pcm: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndarray:
                      phase, a full quantization level at low frequencies)
       energy_level : peak-relative log-energy in 6 dB steps (0..3, 0 = peak)
                      → gain-invariant
+
+    O(n) in the clip length: frames are never gathered into an
+    (n_frames × frame) matrix.  Energy comes from ``frame_energy`` (the same
+    summation order as a gathered row, so the same bits; a prefix-sum energy
+    is not bit-identical), and crossing count, first and last crossing from
+    one sorted array of crossing positions by ``searchsorted`` (exact
+    integers).
     """
     frame = max(int(sr_hz * cfg.audio_frame_ms / 1000), 4)
     hop = max(int(sr_hz * cfg.audio_hop_ms / 1000), 1)
@@ -93,21 +110,23 @@ def frame_symbols(pcm: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndarray:
     if n < frame:
         pcm = np.pad(pcm, (0, frame - n))
         n = frame
-    nf = 1 + (n - frame) // hop
-    idx = np.arange(frame)[None, :] + hop * np.arange(nf)[:, None]
-    frames = pcm[idx]  # (nf, frame)
+    start = hop * np.arange(1 + (n - frame) // hop)
 
-    energy = (frames.astype(np.float64) ** 2).mean(axis=1)
-    log_e = np.log10(energy + 1e-12)
+    log_e = np.log10(frame_energy(pcm, frame, hop) + 1e-12)
     e_rel = log_e - log_e.max()  # peak-relative → gain-invariant
     e_level = np.clip(np.round(-e_rel / 0.6), 0, 3).astype(np.uint8)  # 6 dB steps
 
-    signs = frames >= 0.0
-    cross = signs[:, 1:] != signs[:, :-1]
-    n_cross = cross.sum(axis=1)
-    first = np.argmax(cross, axis=1)
-    last = cross.shape[1] - 1 - np.argmax(cross[:, ::-1], axis=1)
-    span = np.maximum(last - first, 1)
+    # crossing p lies between samples p and p+1; frame j owns p in
+    # [start_j, start_j + frame - 2]
+    signs = pcm >= 0.0
+    cross = np.flatnonzero(signs[1:] != signs[:-1])
+    lo = np.searchsorted(cross, start)
+    hi = np.searchsorted(cross, start + (frame - 1))
+    n_cross = hi - lo
+    # the appended 0 keeps hi - 1 == -1 and lo == len(cross) in bounds; such
+    # frames have n_cross < 2, where freq is 0 and span is unused
+    pad = np.append(cross, 0)
+    span = np.maximum(pad[hi - 1] - pad[lo], 1)
     freq = np.where(n_cross >= 2, (n_cross - 1) * sr_hz / (2.0 * span), 0.0)
     pitch = np.clip(
         np.round(4.0 * np.log2(np.maximum(freq, 1.0) / 110.0)), 0, 23

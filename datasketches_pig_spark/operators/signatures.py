@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.functions.murmur3 import (
     murmur3_long_batch,
     murmur3_x64_128_fixed,
@@ -366,8 +365,6 @@ def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 def band_hashes(sig: np.ndarray, band_count: int, rows_per_band: int, seed: int) -> np.ndarray:
     """(n_clips, num_perm) signature matrix → (n_clips, band_count) uint64
     band-bucket hashes (murmur over each band's 8*r bytes, fixed length)."""
-    from datasketches_pig_spark.functions.murmur3 import murmur3_x64_128_fixed
-
     if band_count * rows_per_band > sig.shape[1]:
         # an out-of-range band would silently hash an empty/truncated slice
         # (every clip sharing one bucket) — fail loudly like the reference's

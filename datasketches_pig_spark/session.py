@@ -25,6 +25,14 @@ _WORKER_ENV = {
     "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
 
+# Byte cap on each Arrow batch sent to a Python worker (Spark's default is
+# 64 MiB).  The clip signature pass reads ~66 MB of payload per task: in
+# one or two batches the JVM cannot stream while Python computes, and under
+# the never-trim malloc above each worker's heap keeps the high-water mark
+# of the largest batch it ever held.  Batches under the cap are unchanged;
+# batch boundaries never change results.
+ARROW_MAX_BYTES_PER_BATCH = 16 << 20
+
 
 def get_spark(
     app_name: str = "datasketches-pig-spark",
@@ -85,6 +93,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config(
+            "spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES_PER_BATCH)
+        )
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -7,6 +7,8 @@ import numpy as np
 from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.operators.shingle import (
     audio_symbols,
+    frame_energy,
+    frame_symbols,
     normalize_text,
     text_shingle_hashes,
 )
@@ -151,6 +153,90 @@ def test_audio_symbols_invariances():
     trim = audio_symbols(pcm[cut:], sr, CFG)
     inter = len(np.intersect1d(base, trim)) / len(np.unique(base))
     assert inter > 0.8
+
+
+def _gather_frames(pcm, frame, hop):
+    nf = 1 + (len(pcm) - frame) // hop
+    return pcm[np.arange(frame)[None, :] + hop * np.arange(nf)[:, None]]
+
+
+def _gather_frame_symbols(pcm, sr_hz, cfg):
+    """Reference framing: gathers every frame into an (n_frames × frame)
+    matrix and reduces row by row.  ``frame_symbols`` must equal it exactly."""
+    frame = max(int(sr_hz * cfg.audio_frame_ms / 1000), 4)
+    hop = max(int(sr_hz * cfg.audio_hop_ms / 1000), 1)
+    if len(pcm) < frame:
+        pcm = np.pad(pcm, (0, frame - len(pcm)))
+    frames = _gather_frames(pcm, frame, hop)  # (n_frames, frame)
+
+    energy = (frames.astype(np.float64) ** 2).mean(axis=1)
+    log_e = np.log10(energy + 1e-12)
+    e_rel = log_e - log_e.max()
+    e_level = np.clip(np.round(-e_rel / 0.6), 0, 3).astype(np.uint8)
+
+    signs = frames >= 0.0
+    cross = signs[:, 1:] != signs[:, :-1]
+    n_cross = cross.sum(axis=1)
+    first = np.argmax(cross, axis=1)
+    last = cross.shape[1] - 1 - np.argmax(cross[:, ::-1], axis=1)
+    span = np.maximum(last - first, 1)
+    freq = np.where(n_cross >= 2, (n_cross - 1) * sr_hz / (2.0 * span), 0.0)
+    pitch = np.clip(
+        np.round(4.0 * np.log2(np.maximum(freq, 1.0) / 110.0)), 0, 23
+    ).astype(np.uint8)
+    return pitch * np.uint8(4) + e_level
+
+
+def test_frame_energy_bit_identical_to_gathered_rows():
+    """Energy summation order is part of the symbol contract: the strided
+    mean must reproduce the gathered rows' float64 bits, not just be close
+    (a prefix-sum energy is close but differs in the last bits)."""
+    rng = np.random.default_rng(5)
+    for frame, hop, n in ((400, 160, 16000), (200, 80, 8001), (1102, 441, 44100)):
+        pcm = ((rng.random(n) - 0.5) * np.linspace(0.001, 1, n)).astype(np.float32)
+        want = (_gather_frames(pcm, frame, hop).astype(np.float64) ** 2).mean(axis=1)
+        got = frame_energy(pcm, frame, hop)
+        assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
+def _assert_framing_exact(pcm, sr):
+    got = frame_symbols(pcm, sr, CFG)
+    want = _gather_frame_symbols(pcm, sr, CFG)
+    assert got.dtype == want.dtype and np.array_equal(got, want), (len(pcm), sr)
+
+
+def test_frame_symbols_matches_gather_reference():
+    """The O(n) framing kernel is bit-identical to the gather form: the
+    energy sums the same values in the same order, crossings are integers."""
+    rng = np.random.default_rng(2024)
+    for sr in (8000, 16000, 22050, 44100):
+        frame = int(sr * CFG.audio_frame_ms / 1000)
+        hop = int(sr * CFG.audio_hop_ms / 1000)
+        lengths = [1, frame // 2, frame - 1, frame, frame + 1, 2 * sr]
+        lengths += [frame + k * hop + d for k in (1, 7) for d in (-1, 0, 1)]
+        for n in lengths:
+            noise = ((rng.random(n) - 0.5) * rng.random()).astype(np.float32)
+            _assert_framing_exact(noise, sr)
+            t = np.arange(n) / sr
+            tone = (0.4 * np.sin(2 * np.pi * rng.uniform(60, 3000) * t)).astype(
+                np.float32
+            )
+            _assert_framing_exact(tone * np.linspace(0.01, 1, n, dtype=np.float32), sr)
+        # no crossings at all, and a DC offset that noise never crosses
+        _assert_framing_exact(np.zeros(2 * frame + 3 * hop, np.float32), sr)
+        dc = 0.2 + 1e-3 * rng.standard_normal(sr).astype(np.float32)
+        _assert_framing_exact(dc.astype(np.float32), sr)
+        _assert_framing_exact((-dc).astype(np.float32), sr)
+        # exactly one crossing in the first frame, several after it
+        one = np.full(frame + 4 * hop, 0.1, np.float32)
+        one[frame // 3 :] = -0.1
+        one[frame + hop :: 7] = 0.3
+        _assert_framing_exact(one, sr)
+        # ±0.0: -0.0 >= 0.0, so a signed-zero run is not a crossing
+        z = np.where(rng.random(3 * frame) < 0.5, -0.0, 0.0).astype(np.float32)
+        z[::frame // 2] = -0.5
+        assert np.signbit(z).any() and (z == 0).any()
+        _assert_framing_exact(z, sr)
 
 
 # ---------------------------------------------------------------------------
