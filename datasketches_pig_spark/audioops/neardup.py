@@ -65,7 +65,7 @@ def audio_signature_frame(
     from datasketches_pig_spark.operators.shingle import audio_shingle_hashes
     from datasketches_pig_spark.operators.signatures import (
         band_hashes,
-        kmv_bottom_k,
+        kmv_prefixes,
         minhash_signatures,
     )
 
@@ -87,20 +87,14 @@ def audio_signature_frame(
                     pdf["bytes"], pdf["codec"], pdf["sr_hz"], dur_ms_batch(pdf)
                 )
             ]
-            sets = audio_shingle_hashes(pcms, list(pdf["sr_hz"]), cfg)
-            counts = np.array([len(s) for s in sets], dtype=np.int64)
-            concat = (
-                np.concatenate(sets)
-                if counts.sum()
-                else np.empty(0, dtype=np.uint64)
-            )
-            mh = minhash_signatures(concat, counts, num_perm, seed)
+            values, counts = audio_shingle_hashes(pcms, list(pdf["sr_hz"]), cfg)
+            mh = minhash_signatures(values, counts, num_perm, seed)
             bands = band_hashes(mh, bc, rpb, seed)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].to_numpy(),
                     "bands": list(bands.view(np.int64)),
-                    "kmv": [kmv_bottom_k(s, kmv_k).view(np.int64) for s in sets],
+                    "kmv": kmv_prefixes(values, counts, kmv_k),
                     "n": counts.astype(np.int32),
                 }
             )

@@ -46,6 +46,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from pathlib import Path
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -105,22 +107,32 @@ def save_history(
         )
     # stamp the store with its config + layout version so a later fold under
     # a drifted config refuses instead of merging incompatible summaries
-    scheme, sep, _ = base_path.partition("://")
-    if not sep or scheme == "file":
+    if _local_dir(base_path) is not None:
         _write_store_meta(base_path, cfg)
+
+
+def _local_dir(base_path: str) -> Path | None:
+    """The local directory of a plain-path or ``file://`` store base (None
+    for a remote scheme): every pathlib path of the store starts here, as
+    ``Path("file:///tmp/x")`` is the RELATIVE path ``file:/tmp/x``."""
+    if base_path.startswith("file:"):  # file:///x, file://host/x, file:/x
+        return Path(urlparse(base_path).path)
+    return None if "://" in base_path else Path(base_path)
 
 
 def _journal_dir(base_path: str) -> str:
     return f"{base_path}/_fold_journal"
 
 
+def _local_journal(base_path: str) -> Path:
+    return _local_dir(base_path) / "_fold_journal"
+
+
 STORE_VERSION = 1  # bump when the store layout/merge semantics change
 
 
-def _store_meta_path(base_path: str):
-    from pathlib import Path
-
-    return Path(base_path) / "_store_meta.json"
+def _store_meta_path(base_path: str) -> Path:
+    return _local_dir(base_path) / "_store_meta.json"
 
 
 def _write_store_meta(base_path: str, cfg: DedupConfig) -> None:
@@ -199,9 +211,8 @@ def _fold_lock(base_path: str, stale_after_s: float = FOLD_LOCK_STALE_S):
     import os
     import socket
     import time
-    from pathlib import Path
 
-    lock = Path(base_path) / "_fold_lock"
+    lock = _local_dir(base_path) / "_fold_lock"
     me = {"pid": os.getpid(), "host": socket.gethostname(), "ts": time.time()}
     for _ in range(8):  # bounded retries: reclaim loops can't spin forever
         try:
@@ -262,8 +273,8 @@ def _require_local_base(base_path: str) -> None:
     local disk and never be seen by the store.  The journaled fold is
     therefore local-parquet-mode only; an Iceberg catalog (the production
     target) replaces the journal with one atomic multi-table transaction."""
-    scheme, sep, _ = base_path.partition("://")
-    if sep and scheme not in ("file",):
+    if _local_dir(base_path) is None:
+        scheme = base_path.partition("://")[0]
         raise ValueError(
             f"journaled fold requires a local base_path (got scheme "
             f"{scheme!r}): the journal's marker/flags live on the driver's "
@@ -271,10 +282,8 @@ def _require_local_base(base_path: str) -> None:
         )
 
 
-def _flag_path(base_path: str, name: str) -> "Path":
-    from pathlib import Path
-
-    return Path(_journal_dir(base_path)) / f"{name}.flag"
+def _flag_path(base_path: str, name: str) -> Path:
+    return _local_journal(base_path) / f"{name}.flag"
 
 
 def pending_fold(base_path: str) -> dict | None:
@@ -282,9 +291,8 @@ def pending_fold(base_path: str) -> dict | None:
     The marker carries the batch fingerprint ``{"n": rows, "idhash": sum of
     xxhash64(clip_id)}`` so a replayed micro-batch can recognise itself."""
     import json
-    from pathlib import Path
 
-    marker = Path(_journal_dir(base_path)) / "marker.json"
+    marker = _local_journal(base_path) / "marker.json"
     if marker.exists():
         try:
             return json.loads(marker.read_text())
@@ -364,7 +372,6 @@ def fold_history(
     (replay after a crash) is simply completed and the fold returns.
     """
     import shutil
-    from pathlib import Path
 
     _require_local_base(base_path)
     # SINGLE-WRITER FENCE (r7): the per-step flags and staged dirs below are
@@ -384,11 +391,11 @@ def fold_history(
             # a DIFFERENT batch's fold was interrupted: finish it from its
             # own journal first, then proceed with this one
             _fold_steps(spark, cfg, base_path, table_prefix, None)
-        elif Path(journal).exists():
+        elif _local_journal(base_path).exists():
             # no marker but journal debris exists (crash mid-input-write, or
             # a partially deleted journal): stale flags/staged dirs must not
             # leak into this fold's step accounting
-            shutil.rmtree(journal, ignore_errors=True)
+            shutil.rmtree(_local_journal(base_path), ignore_errors=True)
         # journal the re-fold inputs first — one extra batch-sized write,
         # the parquet-mode WAL
         new_sigs.write.mode("overwrite").parquet(f"{journal}/new_sigs")
@@ -396,7 +403,9 @@ def fold_history(
             "overwrite"
         ).parquet(f"{journal}/assignments")
         merges.write.mode("overwrite").parquet(f"{journal}/merges")
-        commit_json(Path(journal) / "marker.json", batch_fingerprint(new_sigs))
+        commit_json(
+            _local_journal(base_path) / "marker.json", batch_fingerprint(new_sigs)
+        )
         _fold_steps(spark, cfg, base_path, table_prefix, _fail_after)
 
 
@@ -423,11 +432,11 @@ def _fold_steps(
     _fail_after: str | None,
 ) -> None:
     import shutil
-    from pathlib import Path
 
     from datasketches_pig_spark.operators.lsh import merge_bucket_summaries
 
-    journal = _journal_dir(base_path)
+    journal = _journal_dir(base_path)  # Spark path; local_journal for pathlib
+    local_journal = _local_journal(base_path)
     sigs = spark.read.parquet(f"{journal}/new_sigs")
 
     def fail_point(name: str) -> None:
@@ -465,7 +474,7 @@ def _fold_steps(
 
     # -- step 2: band-bucket summaries (stage inside the journal, then swap)
     staged_buckets = f"{journal}/band_buckets_staged"
-    if not (Path(staged_buckets) / "_SUCCESS").exists():
+    if not (local_journal / "band_buckets_staged" / "_SUCCESS").exists():
         old_buckets = spark.table(f"{table_prefix}_band_buckets")
         new_buckets = bucket_summaries(
             all_bands(sigs, cfg), "band_key", "clip_id", cfg.max_bucket_size
@@ -485,7 +494,7 @@ def _fold_steps(
 
     # -- step 3: clusters (same stage-then-swap) ----------------------------
     staged_clusters = f"{journal}/clusters_staged"
-    if not (Path(staged_clusters) / "_SUCCESS").exists():
+    if not (local_journal / "clusters_staged" / "_SUCCESS").exists():
         assignments = spark.read.parquet(f"{journal}/assignments")
         merges = spark.read.parquet(f"{journal}/merges")
         old_clusters = spark.table(f"{table_prefix}_clusters")
@@ -517,7 +526,7 @@ def _fold_steps(
     # fold committed — drop the journal (marker last would be ideal; on a
     # real FS this rmtree is the single commit point since every step above
     # is a no-op once its flag exists)
-    shutil.rmtree(journal)
+    shutil.rmtree(local_journal)
 
 
 @dataclass

@@ -4,7 +4,8 @@ Everything here is vectorized numpy over Arrow batches; the per-clip Python is
 bookkeeping only (offsets into concatenated arrays), mirroring the reference's
 rule that values are hashed from their canonical byte representation with
 MurmurHash3 seed 9001 (``pig/theta/DataToSketch.java:184-187``,
-``dictionary.html:48-52``).
+``dictionary.html:48-52``).  Each producer returns one flat shingle-set batch
+``(values, counts)``, the form ``operators/signatures.py`` documents.
 
 Audio features are designed to be invariant to the perturbation classes the
 dup model defines (FIXTURES.md F1): peak-relative log-energy (gain ±1 dB and
@@ -23,6 +24,7 @@ from datasketches_pig_spark.functions.murmur3 import (
     murmur3_x64_128,
     murmur3_x64_128_fixed,
 )
+from datasketches_pig_spark.operators.signatures import segment_distinct
 
 _WS = re.compile(r"\s+")
 
@@ -33,16 +35,20 @@ def normalize_text(s: str) -> str:
 
 def text_shingle_hashes(
     texts: list[str | None], cfg: DedupConfig
-) -> list[np.ndarray]:
-    """Per text: uint64 hashes of its distinct byte k-grams (k=shingle_k_text).
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per text: uint64 hashes of its distinct byte k-grams (k=shingle_k_text),
+    as one flat shingle-set batch ``(values, counts)`` (the form
+    ``operators/signatures.py`` documents).
 
     All k-grams across the batch are hashed in one fixed-length vectorized
-    murmur call.  Texts shorter than k contribute one whole-string shingle.
+    murmur call.  A text shorter than k contributes one whole-string shingle,
+    in its own segment; ``None`` and empty texts contribute none.
     """
     k = cfg.shingle_k_text
     bufs: list[np.ndarray] = []
     counts = np.zeros(len(texts), dtype=np.int64)
-    short: list[tuple[int, bytes]] = []
+    short = np.zeros(len(texts), dtype=bool)
+    short_h: list[int] = []
     for i, t in enumerate(texts):
         if t is None:
             continue
@@ -50,26 +56,24 @@ def text_shingle_hashes(
         if len(raw) == 0:
             continue
         if len(raw) < k:
-            short.append((i, raw.tobytes()))
+            short[i] = True
+            short_h.append(murmur3_x64_128(raw.tobytes(), cfg.seed)[0])
+            counts[i] = 1
             continue
-        n = len(raw) - k + 1
         # stride-trick window view → (n, k) grams
         grams = np.lib.stride_tricks.sliding_window_view(raw, k)
         bufs.append(grams)
-        counts[i] = n
+        counts[i] = len(raw) - k + 1
 
-    out: list[np.ndarray] = [np.empty(0, dtype=np.uint64) for _ in texts]
+    values = np.empty(int(counts.sum()), dtype=np.uint64)
+    at_short = np.repeat(short, counts)
+    values[at_short] = short_h
     if bufs:
-        allgrams = np.concatenate(bufs, axis=0)
-        h1, _ = murmur3_x64_128_fixed(np.ascontiguousarray(allgrams), cfg.seed)
-        pos = 0
-        for i, c in enumerate(counts):
-            if c:
-                out[i] = np.unique(h1[pos : pos + c])
-                pos += c
-    for i, b in short:
-        out[i] = np.array([murmur3_x64_128(b, cfg.seed)[0]], dtype=np.uint64)
-    return out
+        h1, _ = murmur3_x64_128_fixed(
+            np.ascontiguousarray(np.concatenate(bufs, axis=0)), cfg.seed
+        )
+        values[~at_short] = h1
+    return segment_distinct(values, counts)
 
 
 # ---------------------------------------------------------------------------
@@ -163,8 +167,10 @@ def audio_symbols(pcm: np.ndarray, sr_hz: int, cfg: DedupConfig) -> np.ndarray:
 
 def audio_shingle_hashes(
     pcms: list[np.ndarray | None], srs: list[int], cfg: DedupConfig
-) -> list[np.ndarray]:
-    """Per clip: uint64 hashes of distinct k-grams of its symbol stream."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per clip: uint64 hashes of the distinct k-grams of its symbol stream,
+    as one flat shingle-set batch ``(values, counts)``; a missing or empty
+    clip contributes none."""
     k = cfg.shingle_k_audio
     bufs: list[np.ndarray] = []
     counts = np.zeros(len(pcms), dtype=np.int64)
@@ -178,13 +184,9 @@ def audio_shingle_hashes(
         bufs.append(grams)
         counts[i] = grams.shape[0]
 
-    out: list[np.ndarray] = [np.empty(0, dtype=np.uint64) for _ in pcms]
-    if bufs:
-        allgrams = np.concatenate(bufs, axis=0)
-        h1, _ = murmur3_x64_128_fixed(np.ascontiguousarray(allgrams), cfg.seed)
-        pos = 0
-        for i, c in enumerate(counts):
-            if c:
-                out[i] = np.unique(h1[pos : pos + c])
-                pos += c
-    return out
+    if not bufs:
+        return np.empty(0, dtype=np.uint64), counts
+    h1, _ = murmur3_x64_128_fixed(
+        np.ascontiguousarray(np.concatenate(bufs, axis=0)), cfg.seed
+    )
+    return segment_distinct(h1, counts)

@@ -26,7 +26,7 @@ from datasketches_pig_spark.operators.shingle import (
 )
 from datasketches_pig_spark.operators.signatures import (
     band_hashes,
-    kmv_bottom_k,
+    kmv_prefixes,
     minhash_signatures,
     simhash64,
 )
@@ -90,69 +90,54 @@ def signature_stage(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     production scale that is a column-pruned scan of a small fraction, far
     cheaper than materializing text through every stage boundary.
     """
-    seed = cfg.seed
-    num_perm = cfg.num_perm
-    kmv_k = cfg.kmv_k
-    bc, rpb = cfg.band_count, cfg.rows_per_band
-    text_band_seed = _band_seed(cfg, "text")
-    audio_band_seed = _band_seed(cfg, "audio")
     ext = audio_decoder_snapshot()  # plan-build-time capture → executors
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            # --- exact key over raw payload bytes ---
-            # blake2b (C speed, GB/s) — the exact-byte fast path only needs a
-            # collision-resistant digest, not murmur parity; murmur stays the
-            # contract for all shingle/signature hashing
-            e1 = np.array(
-                [
-                    int.from_bytes(hashlib.blake2b(b, digest_size=8).digest(), "little")
-                    for b in pdf["bytes"]
-                ],
-                dtype=np.uint64,
-            )
-
-            # --- decode + audio shingles ---
-            pcms = [
-                decode_clip(b, c, int(s), decoders=ext, dur_ms=d)
-                for b, c, s, d in zip(
-                    pdf["bytes"], pdf["codec"], pdf["sr_hz"], dur_ms_batch(pdf)
-                )
-            ]
-            a_sets = audio_shingle_hashes(pcms, list(pdf["sr_hz"]), cfg)
-            t_sets = text_shingle_hashes(list(pdf["transcript"]), cfg)
-
-            def pack(sets: list[np.ndarray], band_seed: int):
-                counts = np.array([len(s) for s in sets], dtype=np.int64)
-                concat = (
-                    np.concatenate(sets) if counts.sum() else np.empty(0, dtype=np.uint64)
-                )
-                mh = minhash_signatures(concat, counts, num_perm, seed)
-                bands = band_hashes(mh, bc, rpb, band_seed)  # (n, band_count)
-                sh = simhash64(concat, counts)
-                kmv = [kmv_bottom_k(s, kmv_k).view(np.int64) for s in sets]
-                return counts, bands.view(np.int64), sh, kmv
-
-            t_counts, t_bands, t_sh, t_kmv = pack(t_sets, text_band_seed)
-            a_counts, a_bands, a_sh, a_kmv = pack(a_sets, audio_band_seed)
-
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].values,
-                    "exact_key": e1.view(np.int64),
-                    "text_bands": list(t_bands),
-                    "text_kmv": t_kmv,
-                    "text_simhash": t_sh,
-                    "n_text_shingles": t_counts.astype(np.int32),
-                    "audio_bands": list(a_bands),
-                    "audio_kmv": a_kmv,
-                    "audio_simhash": a_sh,
-                    "n_audio_shingles": a_counts.astype(np.int32),
-                    "dur_ms": pdf["dur_ms"].values,
-                }
-            )
+            if len(pdf):
+                yield signature_batch(pdf, cfg, ext)
 
     return clips.mapInPandas(run, schema=SIGNATURE_SCHEMA)
+
+
+def signature_batch(
+    pdf: pd.DataFrame, cfg: DedupConfig, decoders: dict | None
+) -> pd.DataFrame:
+    """One Arrow batch of ``signature_stage``: clip rows → signature rows.
+    Both modalities' shingle sets stay in the flat ``(values, counts)`` form
+    from the producer to the MinHash/SimHash/KMV kernels."""
+    # --- exact key over raw payload bytes ---
+    # blake2b (C speed, GB/s) — the exact-byte fast path only needs a
+    # collision-resistant digest, not murmur parity; murmur stays the
+    # contract for all shingle/signature hashing
+    e1 = np.array(
+        [
+            int.from_bytes(hashlib.blake2b(b, digest_size=8).digest(), "little")
+            for b in pdf["bytes"]
+        ],
+        dtype=np.uint64,
+    )
+
+    # --- decode + shingles ---
+    pcms = [
+        decode_clip(b, c, int(s), decoders=decoders, dur_ms=d)
+        for b, c, s, d in zip(
+            pdf["bytes"], pdf["codec"], pdf["sr_hz"], dur_ms_batch(pdf)
+        )
+    ]
+
+    out = {"clip_id": pdf["clip_id"].values, "exact_key": e1.view(np.int64)}
+    for modality, (values, counts) in (
+        ("text", text_shingle_hashes(list(pdf["transcript"]), cfg)),
+        ("audio", audio_shingle_hashes(pcms, list(pdf["sr_hz"]), cfg)),
+    ):
+        mh = minhash_signatures(values, counts, cfg.num_perm, cfg.seed)
+        bands = band_hashes(
+            mh, cfg.band_count, cfg.rows_per_band, _band_seed(cfg, modality)
+        )
+        out[f"{modality}_bands"] = list(bands.view(np.int64))
+        out[f"{modality}_kmv"] = kmv_prefixes(values, counts, cfg.kmv_k)
+        out[f"{modality}_simhash"] = simhash64(values, counts)
+        out[f"n_{modality}_shingles"] = counts.astype(np.int32)
+    out["dur_ms"] = pdf["dur_ms"].values
+    return pd.DataFrame(out)

@@ -125,39 +125,28 @@ def warm_python_workers(spark: SparkSession, tasks: int | None = None) -> None:
         import numpy as np
         import pandas as pd
 
-        from datasketches_pig_spark.audioops.codecs import wav_encode_pcm16, decode_clip
+        from datasketches_pig_spark.audioops.codecs import wav_encode_pcm16
         from datasketches_pig_spark.config import DedupConfig
-        from datasketches_pig_spark.operators.shingle import (
-            audio_shingle_hashes,
-            text_shingle_hashes,
-        )
-        from datasketches_pig_spark.operators.signatures import (
-            minhash_signatures,
-            simhash64,
-            kmv_bottom_k,
-        )
+        from datasketches_pig_spark.operators.stages import signature_batch
 
-        # run the real kernels on synthetic clips so the worker's heap grows
-        # to its steady-state size here, not in the first timed batch — fresh
-        # page faults across 32 concurrent workers otherwise dominate in
-        # kernel time (TLB shootdowns), not user compute
-        cfg = DedupConfig()
-        rng = np.random.RandomState(0)
-        pcm = (rng.rand(16000).astype(np.float32) - 0.5) * 0.6
-        blobs = [wav_encode_pcm16(pcm, 16000)] * 64
+        # run the signature pass's own batch kernel on synthetic clips so the
+        # worker's heap grows to its steady-state size here, not in the first
+        # timed batch — fresh page faults across 32 concurrent workers
+        # otherwise dominate in kernel time (TLB shootdowns), not user compute
+        pcm = (np.random.RandomState(0).rand(16000).astype(np.float32) - 0.5) * 0.6
         texts = [" ".join(f"w{i}{j}" for j in range(120)) for i in range(64)]
+        clips = pd.DataFrame(
+            {
+                "clip_id": [str(i) for i in range(64)],
+                "bytes": [wav_encode_pcm16(pcm, 16000)] * 64,
+                "codec": "pcm_s16le",
+                "sr_hz": 16000,
+                "dur_ms": 1000,
+                "transcript": texts,
+            }
+        )
         for _ in range(2):
-            pcms = [decode_clip(b, "pcm_s16le", 16000) for b in blobs]
-            a = audio_shingle_hashes(pcms, [16000] * len(blobs), cfg)
-            t = text_shingle_hashes(texts, cfg)
-            for sets in (t, a):
-                counts = np.array([len(x) for x in sets], dtype=np.int64)
-                concat = (
-                    np.concatenate(sets) if counts.sum() else np.empty(0, np.uint64)
-                )
-                minhash_signatures(concat, counts, cfg.num_perm, cfg.seed)
-                simhash64(concat, counts)
-                [kmv_bottom_k(x, cfg.kmv_k) for x in sets]
+            signature_batch(clips, DedupConfig(), None)
         for pdf in batches:
             yield pd.DataFrame({"n": [len(pdf)]})
 

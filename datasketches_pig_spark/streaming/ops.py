@@ -82,7 +82,10 @@ def streaming_theta_distinct(keyed: DataFrame, k: int = 256, seed: int = 9001) -
     Input: streaming DataFrame with (key string, value string).
     """
     from datasketches_pig_spark.functions.murmur3 import murmur3_bytes_batch
-    from datasketches_pig_spark.operators.signatures import kmv_distinct_estimate
+    from datasketches_pig_spark.operators.signatures import (
+        kmv_bottom_k,
+        kmv_distinct_estimate,
+    )
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -96,7 +99,7 @@ def streaming_theta_distinct(keyed: DataFrame, k: int = 256, seed: int = 9001) -
             vals = [v.encode("utf-8") if v is not None else None for v in pdf["value"]]
             h1, _, valid = murmur3_bytes_batch(vals, seed)
             # KMV update semantics: union, keep k smallest distinct
-            sketch = np.unique(np.concatenate([sketch, h1[valid]]))[:k]
+            sketch = kmv_bottom_k(np.concatenate([sketch, h1[valid]]), k)
         state.update((sketch.view(np.int64).tolist(),))
         est = kmv_distinct_estimate(sketch, k)
         yield pd.DataFrame(
@@ -176,6 +179,7 @@ def streaming_replay_stats(
     """
     from datasketches_pig_spark.functions.murmur3 import murmur3_long_batch
     from datasketches_pig_spark.operators.signatures import (
+        kmv_bottom_k,
         kmv_distinct_estimate,
     )
 
@@ -200,7 +204,7 @@ def streaming_replay_stats(
             # exact int64: nulls arrive flagged in user_null (see keyed below)
             users = pdf["user_id"].to_numpy(np.int64)[~pdf["user_null"].to_numpy(bool)]
             h1, _ = murmur3_long_batch(users, seed)
-            sketch = np.unique(np.concatenate([sketch, h1]))[:k]
+            sketch = kmv_bottom_k(np.concatenate([sketch, h1]), k)
         state.update((int(n), float(s), sketch.view(np.int64).tolist()))
         du = (
             len(sketch)

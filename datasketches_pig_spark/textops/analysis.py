@@ -120,7 +120,10 @@ def _fingerprint_batch(texts: list[str | None]) -> np.ndarray:
     with fewer than ``_FP_WINDOW`` tokens use one whole-doc window, computed
     the same way per token-count bucket (≤ 7 tiny groups).  Scalar
     replication: ``tools/gen_fingerprint_oracle.py``."""
-    from datasketches_pig_spark.operators.signatures import flat_token_hashes
+    from datasketches_pig_spark.operators.signatures import (
+        flat_token_hashes,
+        in_doc_windows,
+    )
 
     n_docs = len(texts)
     out = np.zeros(n_docs, dtype=np.int64)
@@ -133,16 +136,10 @@ def _fingerprint_batch(texts: list[str | None]) -> np.ndarray:
     # stays inside one doc
     full = tok_counts >= _FP_WINDOW
     if full.any():
-        total = len(th)
-        w = _FP_WINDOW
-        win = np.lib.stride_tricks.sliding_window_view(th, w)  # (total-w+1, w)
-        doc_id = np.repeat(np.arange(n_docs, dtype=np.int64), tok_counts)
-        valid = doc_id[: total - w + 1] == doc_id[w - 1 :]
-        vw = win[valid]
+        vw, vdoc = in_doc_windows(th, tok_counts, _FP_WINDOW)
         acc = np.zeros(len(vw), dtype=np.uint64)
-        for j in range(w):
+        for j in range(_FP_WINDOW):
             acc = acc * _FP_BASE + vw[:, j]
-        vdoc = doc_id[: total - w + 1][valid]
         starts = np.concatenate([[0], np.flatnonzero(vdoc[1:] != vdoc[:-1]) + 1])
         mins = np.minimum.reduceat(acc, starts)
         out[vdoc[starts]] = mins.view(np.int64)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 
 from datasketches_pig_spark.operators.signatures import (
     band_hashes,
+    kmv_prefixes,
     minhash_signatures,
     word_ngram_hash_sets,
 )
@@ -195,18 +196,20 @@ def minhash_stage(
 ) -> DataFrame:
     """(id, bands, n_shingles, kmv) via the flat-array shingle
     kernel (``word_ngram_hash_sets``: batch tokenize → token murmur →
-    window-of-token-hashes gram murmur → one lexsort dedup) — one Arrow
-    pass, no shuffle, no per-doc Python loop.  Docs with < n tokens shingle
-    as char ``char_fallback_n``-grams (the no-space-script fallback).
+    window-of-token-hashes gram murmur → per-doc distinct by
+    ``segment_distinct``) — one Arrow pass, no shuffle, no per-token Python.
+    Docs with < n tokens shingle as char ``char_fallback_n``-grams (the
+    no-space-script fallback).
 
     r5: the 128-perm MinHash signature is folded into ``band_count`` 64-bit
     band keys INSIDE the pass (the same rule the clip pipeline's
     ``signature_stage`` follows — the signature itself never leaves the
     kernel, 32 longs travel instead of 128), and each doc also emits
     ``kmv`` — the bottom-``kmv_prefix`` of its distinct gram hashes (the
-    per-doc segments come out of the kernel already uint64-sorted, so the
-    prefix is a zero-cost slice).  ``n_shingles`` stays the EXACT distinct
-    gram count; together they power the prefix-verify prefilter in
+    per-doc segments come out of the kernel already uint64-sorted, so
+    ``kmv_prefixes`` slices them without a second sort).  ``n_shingles``
+    stays the EXACT distinct gram count; together they power the
+    prefix-verify prefilter in
     ``minhash_dedup_pairs`` (``kmv_prefix=0`` emits empty ``kmv`` arrays
     for the route that runs no prefilter)."""
 
@@ -219,22 +222,12 @@ def minhash_stage(
             )
             mh = minhash_signatures(concat, counts, num_perm, seed)
             bh = band_hashes(mh, band_count, rows_per_band, seed)
-            # bottom-kmv_prefix per doc: segments are already sorted uint64
-            starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-            within = np.arange(len(concat), dtype=np.int64) - np.repeat(
-                starts, counts
-            )
-            kflat = concat[within < kmv_prefix].view(np.int64)
-            kcounts = np.minimum(counts, kmv_prefix)
-            offs = np.concatenate([[0], np.cumsum(kcounts)]).astype(np.int64)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].astype("int64"),
                     "bands": list(bh.view(np.int64)),
                     "n_shingles": counts.astype(np.int32),
-                    "kmv": [
-                        kflat[offs[i] : offs[i + 1]] for i in range(len(pdf))
-                    ],
+                    "kmv": kmv_prefixes(concat, counts, kmv_prefix),
                 }
             )
 

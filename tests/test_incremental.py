@@ -349,6 +349,60 @@ def test_fold_rejects_remote_base(spark, split_corpus):
     _require_local_base("/tmp/x")
 
 
+def test_fold_on_file_uri_base(spark, split_corpus, tmp_path_factory, monkeypatch):
+    """A ``file://`` store base is the local filesystem: save_history, a
+    crash-injected fold and repair_fold put the meta, the writer lock and
+    the journal marker/flags in the directory the URI names — not under a
+    relative ``file:`` directory in the CWD."""
+    from datasketches_pig_spark.incremental import (
+        _fold_lock,
+        _local_dir,
+        fold_history,
+        pending_fold,
+        repair_fold,
+    )
+    from datasketches_pig_spark.operators.stages import signature_stage
+
+    day1, day2, _ = split_corpus
+    cfg = DedupConfig()
+    real = tmp_path_factory.mktemp("furi")
+    base = real.as_uri()
+    assert base.startswith("file:///")
+    cwd = tmp_path_factory.mktemp("furi_cwd")
+    monkeypatch.chdir(cwd)
+    for t in ("signatures", "band_buckets", "clusters"):
+        spark.sql(f"DROP TABLE IF EXISTS furi_{t}")
+    sigs1 = signature_stage(day1, cfg).localCheckpoint()
+    save_history(
+        spark, sigs1, sigs1.select("clip_id", F.col("clip_id").alias("cluster_id")),
+        cfg, base, "furi", num_buckets=4,
+    )
+    assert (real / "_store_meta.json").exists()
+    with _fold_lock(base):
+        assert (real / "_fold_lock").exists()
+    assert not (real / "_fold_lock").exists()
+
+    new_sigs = signature_stage(day2, cfg).localCheckpoint()
+    assigns = new_sigs.select("clip_id", F.col("clip_id").alias("cluster_id"))
+    merges = spark.createDataFrame([], "old_cluster_id string, cluster_id string")
+    with pytest.raises(RuntimeError, match="crash injected"):
+        fold_history(
+            spark, new_sigs, assigns, merges, cfg, base, "furi",
+            _fail_after="buckets_staged",
+        )
+    journal = real / "_fold_journal"
+    assert (journal / "marker.json").exists() and (journal / "sig_done.flag").exists()
+    assert pending_fold(base) is not None
+    assert repair_fold(spark, cfg, base, "furi") is True
+    assert pending_fold(base) is None and not journal.exists()
+    assert not (real / "_fold_lock").exists()
+    assert spark.table("furi_signatures").count() == day1.count() + day2.count()
+    assert spark.table("furi_clusters").count() == day1.count() + day2.count()
+    assert list(cwd.iterdir()) == []
+    # Hadoop's single-slash form names the same directory
+    assert _local_dir(f"file:{real}") == _local_dir(base) == real
+
+
 def test_incremental_releases_shard_caches(spark, split_corpus):
     """ADVICE r4 (low): every incremental_dedup call (and therefore every
     streaming micro-batch) must return with the salted expansion's shard

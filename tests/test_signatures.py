@@ -30,14 +30,20 @@ def test_normalize_text():
     assert normalize_text("  Hello\t WORLD \n") == "hello world"
 
 
+def _split(values, counts):
+    return np.split(values, np.cumsum(counts)[:-1])
+
+
 def test_text_shingles_deterministic_and_distinct():
-    out = text_shingle_hashes(["abcdefgh", "abcdefgh", "zzzzzzzz", None, ""], CFG)
+    out = _split(
+        *text_shingle_hashes(["abcdefgh", "abcdefgh", "zzzzzzzz", None, ""], CFG)
+    )
     assert np.array_equal(out[0], out[1])
     assert len(out[0]) == len("abcdefgh") - CFG.shingle_k_text + 1
     assert len(out[3]) == 0 and len(out[4]) == 0
     assert len(np.intersect1d(out[0], out[2])) == 0
     # shorter than k → one whole-string shingle
-    short = text_shingle_hashes(["ab"], CFG)
+    short = _split(*text_shingle_hashes(["ab"], CFG))
     assert len(short[0]) == 1
 
 
@@ -356,3 +362,282 @@ def test_simhash_combo_keys_np_matches_codegen(spark):
         )
         got_arr = exploded["col"].to_numpy(np.int64).reshape(want.shape)
         assert np.array_equal(got_arr, want), h
+
+
+# ---------------------------------------------------------------------------
+# flat shingle-set form vs the list-of-arrays reference kernels
+# ---------------------------------------------------------------------------
+# The references below are the earlier list-of-arrays producers (one
+# np.unique per item), the lexsort + scatter-merge word kernel, and the
+# per-item kmv_bottom_k.  The flat kernels must equal them byte for byte.
+
+
+def _ref_text_shingle_hashes(texts, cfg):
+    from datasketches_pig_spark.functions.murmur3 import (
+        murmur3_x64_128,
+        murmur3_x64_128_fixed,
+    )
+
+    k = cfg.shingle_k_text
+    bufs, short = [], []
+    counts = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts):
+        if t is None:
+            continue
+        raw = np.frombuffer(normalize_text(t).encode("utf-8"), dtype=np.uint8)
+        if len(raw) == 0:
+            continue
+        if len(raw) < k:
+            short.append((i, raw.tobytes()))
+            continue
+        bufs.append(np.lib.stride_tricks.sliding_window_view(raw, k))
+        counts[i] = len(raw) - k + 1
+    out = [np.empty(0, dtype=np.uint64) for _ in texts]
+    if bufs:
+        h1, _ = murmur3_x64_128_fixed(
+            np.ascontiguousarray(np.concatenate(bufs, axis=0)), cfg.seed
+        )
+        pos = 0
+        for i, c in enumerate(counts):
+            if c:
+                out[i] = np.unique(h1[pos : pos + c])
+                pos += c
+    for i, b in short:
+        out[i] = np.array([murmur3_x64_128(b, cfg.seed)[0]], dtype=np.uint64)
+    return out
+
+
+def _ref_audio_shingle_hashes(pcms, srs, cfg):
+    from datasketches_pig_spark.functions.murmur3 import murmur3_x64_128_fixed
+
+    k = cfg.shingle_k_audio
+    bufs = []
+    counts = np.zeros(len(pcms), dtype=np.int64)
+    for i, pcm in enumerate(pcms):
+        if pcm is None or len(pcm) == 0:
+            continue
+        sym = audio_symbols(pcm, int(srs[i]), cfg)
+        if len(sym) < k:
+            sym = np.pad(sym, (0, k - len(sym)))
+        grams = np.lib.stride_tricks.sliding_window_view(sym, k)
+        bufs.append(grams)
+        counts[i] = grams.shape[0]
+    out = [np.empty(0, dtype=np.uint64) for _ in pcms]
+    if bufs:
+        h1, _ = murmur3_x64_128_fixed(
+            np.ascontiguousarray(np.concatenate(bufs, axis=0)), cfg.seed
+        )
+        pos = 0
+        for i, c in enumerate(counts):
+            if c:
+                out[i] = np.unique(h1[pos : pos + c])
+                pos += c
+    return out
+
+
+def _ref_window_gram_hashes(th, tok_counts, n, seed):
+    from datasketches_pig_spark.functions.murmur3 import murmur3_x64_128_fixed
+
+    n_docs = len(tok_counts)
+    counts = np.zeros(n_docs, dtype=np.int64)
+    total = len(th)
+    if total < n:
+        return np.empty(0, dtype=np.uint64), counts
+    doc_id = np.repeat(np.arange(n_docs, dtype=np.int64), tok_counts)
+    win = np.lib.stride_tricks.sliding_window_view(th, n)
+    valid = doc_id[: total - n + 1] == doc_id[n - 1 :]
+    if not valid.any():
+        return np.empty(0, dtype=np.uint64), counts
+    data = np.ascontiguousarray(win[valid]).view(np.uint8)
+    gh, _ = murmur3_x64_128_fixed(data.reshape(-1, 8 * n), seed)
+    gdoc = doc_id[: total - n + 1][valid]
+    order = np.lexsort((gh, gdoc))
+    gd, gs = gdoc[order], gh[order]
+    keep = np.empty(len(gs), dtype=bool)
+    keep[0] = True
+    keep[1:] = (gd[1:] != gd[:-1]) | (gs[1:] != gs[:-1])
+    gd, gs = gd[keep], gs[keep]
+    return gs, np.bincount(gd, minlength=n_docs).astype(np.int64)
+
+
+def _ref_word_ngram_hash_sets(texts, n, seed, char_fallback_n):
+    from datasketches_pig_spark.operators.signatures import (
+        flat_char_hashes,
+        flat_token_hashes,
+    )
+
+    th, tok_counts = flat_token_hashes(texts, seed)
+    gs, counts = _ref_window_gram_hashes(th, tok_counts, n, seed)
+    if char_fallback_n is None:
+        return gs, counts
+    fb = np.flatnonzero(tok_counts < n)
+    if len(fb) == 0:
+        return gs, counts
+    ch, ch_counts = flat_char_hashes([texts[i] for i in fb], seed)
+    gs_c, cnt_c = _ref_window_gram_hashes(ch, ch_counts, char_fallback_n, seed)
+    if len(gs_c) == 0:
+        return gs, counts
+    out_counts = counts.copy()
+    out_counts[fb] = cnt_c
+    out = np.empty(int(out_counts.sum()), dtype=np.uint64)
+    offs = np.concatenate([[0], np.cumsum(out_counts)[:-1]])
+    w_offs = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    c_offs = np.concatenate([[0], np.cumsum(cnt_c)[:-1]])
+    word_docs = np.flatnonzero(counts > 0)
+    if len(word_docs):
+        idx = np.repeat(offs[word_docs] - w_offs[word_docs], counts[word_docs])
+        out[np.arange(len(gs), dtype=np.int64) + idx] = gs
+    nz = cnt_c > 0
+    if nz.any():
+        idx = np.repeat(offs[fb[nz]] - c_offs[nz], cnt_c[nz])
+        out[np.arange(len(gs_c), dtype=np.int64) + idx] = gs_c
+    return out, out_counts
+
+
+def _assert_flat_equals_list(flat, sets):
+    values, counts = flat
+    assert values.dtype == np.uint64 and counts.dtype == np.int64
+    assert counts.tolist() == [len(s) for s in sets]
+    want = np.concatenate(sets) if sets else np.empty(0, np.uint64)
+    assert values.tobytes() == want.astype(np.uint64).tobytes()
+
+
+def _mixed_texts(rng, n_docs):
+    words = ["alpha", "Beta", "gamma", "ü", "x", "日本語テキスト", "a", "dup"]
+    cjk = list("日本語中文字符テキストの한국어")
+    texts = [None, "", "   \t\n ", "ab", "abcd", "x"]
+    for _ in range(n_docs):
+        r = rng.random()
+        if r < 0.05:
+            texts.append(None)
+        elif r < 0.1:
+            texts.append(" " * int(rng.integers(0, 4)))
+        elif r < 0.35:
+            size = int(rng.integers(0, 30))
+            texts.append("".join(rng.choice(cjk, size=size)))
+        else:
+            size = int(rng.integers(0, 40))
+            texts.append(" ".join(rng.choice(words, size=size)))
+    return texts
+
+
+def test_text_shingle_hashes_flat_matches_list_reference():
+    rng = np.random.default_rng(10)
+    for _ in range(3):
+        texts = _mixed_texts(rng, 300)
+        rng.shuffle(texts)
+        _assert_flat_equals_list(
+            text_shingle_hashes(texts, CFG), _ref_text_shingle_hashes(texts, CFG)
+        )
+    _assert_flat_equals_list(text_shingle_hashes([], CFG), [])
+    # only short and empty texts: no batch-wide gram hash at all
+    short = [None, "ab", "", "abcd"]
+    _assert_flat_equals_list(
+        text_shingle_hashes(short, CFG), _ref_text_shingle_hashes(short, CFG)
+    )
+
+
+def test_audio_shingle_hashes_flat_matches_list_reference():
+    from datasketches_pig_spark.audioops.codecs import decode_clip
+    from datasketches_pig_spark.data.clips import generate_clips_pandas
+    from datasketches_pig_spark.operators.shingle import audio_shingle_hashes
+
+    pdf, _, _ = generate_clips_pandas(5, seed=12)
+    pcms = [
+        decode_clip(b, c, int(s))
+        for b, c, s in zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
+    ]
+    srs = [int(s) for s in pdf["sr_hz"]]
+    # missing, empty, and shorter than one 25 ms frame
+    pcms[1:1] = [None, np.zeros(0, np.float32), np.full(50, 0.1, np.float32)]
+    srs[1:1] = [16000, 16000, 16000]
+    _assert_flat_equals_list(
+        audio_shingle_hashes(pcms, srs, CFG),
+        _ref_audio_shingle_hashes(pcms, srs, CFG),
+    )
+    _assert_flat_equals_list(
+        audio_shingle_hashes([None, np.zeros(0, np.float32)], [8000] * 2, CFG),
+        [np.empty(0, np.uint64)] * 2,
+    )
+
+
+def test_word_ngram_hash_sets_matches_lexsort_reference():
+    from datasketches_pig_spark.operators.signatures import word_ngram_hash_sets
+
+    rng = np.random.default_rng(11)
+    texts = _mixed_texts(rng, 400)
+    for n in (2, 3, 5):
+        for fb in (None, 4, 6):
+            got = word_ngram_hash_sets(texts, n, 9001, fb)
+            want = _ref_word_ngram_hash_sets(texts, n, 9001, fb)
+            assert got[1].tolist() == want[1].tolist(), (n, fb)
+            assert got[0].tobytes() == want[0].tobytes(), (n, fb)
+    # a batch of fallback docs only, and one with no gram at all
+    for batch in (["日本語のテキスト", None, "中文"], [None, "", "a b"]):
+        got = word_ngram_hash_sets(batch, 3, 9001, 4)
+        want = _ref_word_ngram_hash_sets(batch, 3, 9001, 4)
+        assert got[1].tolist() == want[1].tolist()
+        assert got[0].tobytes() == want[0].tobytes()
+
+
+def test_segment_distinct_and_kmv_prefixes_match_per_item_reference():
+    from datasketches_pig_spark.operators.signatures import (
+        kmv_prefixes,
+        segment_distinct,
+    )
+
+    rng = np.random.default_rng(13)
+    raw = [
+        rng.integers(0, m, size=c, dtype=np.uint64)
+        for c, m in [(0, 9), (1, 9), (40, 9), (300, 2**64 - 1), (0, 9), (7, 3)]
+    ]
+    values, counts = segment_distinct(
+        np.concatenate(raw), np.array([len(r) for r in raw])
+    )
+    sets = [np.unique(r) for r in raw]
+    _assert_flat_equals_list((values, counts), sets)
+    # count > k, count < k, count == k and k = 0
+    for k in (0, 1, 7, 9, 256):
+        got = kmv_prefixes(values, counts, k)
+        assert len(got) == len(sets)
+        for g, s in zip(got, sets):
+            assert g.dtype == np.int64
+            assert g.tobytes() == kmv_bottom_k(s, k).view(np.int64).tobytes()
+    assert kmv_prefixes(np.empty(0, np.uint64), np.zeros(0, np.int64), 4) == []
+    empty = segment_distinct(np.empty(0, np.uint64), np.zeros(3, np.int64))
+    assert len(empty[0]) == 0 and empty[1].tolist() == [0, 0, 0]
+
+
+def test_signature_batch_matches_list_reference():
+    """The clip signature batch (both modalities, flat form end to end)
+    equals the list-of-arrays path: per-item sets concatenated for
+    MinHash/SimHash and a per-item kmv_bottom_k."""
+    from datasketches_pig_spark.audioops.codecs import decode_clip
+    from datasketches_pig_spark.data.clips import generate_clips_pandas
+    from datasketches_pig_spark.operators.stages import _band_seed, signature_batch
+
+    pdf, _, _ = generate_clips_pandas(6, seed=14)
+    pdf.loc[pdf.index[0], "transcript"] = None
+    pdf.loc[pdf.index[1], "transcript"] = "ab"
+    got = signature_batch(pdf, CFG, None)
+    pcms = [
+        decode_clip(b, c, int(s))
+        for b, c, s in zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
+    ]
+    for modality, sets in (
+        ("text", _ref_text_shingle_hashes(list(pdf["transcript"]), CFG)),
+        ("audio", _ref_audio_shingle_hashes(pcms, list(pdf["sr_hz"]), CFG)),
+    ):
+        counts = np.array([len(s) for s in sets], dtype=np.int64)
+        concat = np.concatenate(sets)
+        mh = minhash_signatures(concat, counts, CFG.num_perm, CFG.seed)
+        bands = band_hashes(
+            mh, CFG.band_count, CFG.rows_per_band, _band_seed(CFG, modality)
+        ).view(np.int64)
+        assert np.array_equal(np.stack(got[f"{modality}_bands"]), bands)
+        assert np.array_equal(
+            got[f"{modality}_simhash"].to_numpy(), simhash64(concat, counts)
+        )
+        assert got[f"n_{modality}_shingles"].tolist() == counts.tolist()
+        for g, s in zip(got[f"{modality}_kmv"], sets):
+            assert g.tobytes() == kmv_bottom_k(s, CFG.kmv_k).view(np.int64).tobytes()

@@ -208,7 +208,8 @@ def main() -> None:
         ]
         sym = scalar_symbols(pcm, sr)
         # cross-check 2: scalar symbols reproduce the engine kernel's grams
-        kernel = audio_shingle_hashes([vec], [sr], cfg)[0]
+        kernel, counts = audio_shingle_hashes([vec], [sr], cfg)
+        assert counts.tolist() == [len(kernel)]
         mine = scalar_gram_set(sym, SEED)
         if set(int(h) for h in kernel) != mine:
             raise Fragile(f"kernel/scalar gram disagreement on clip {doc_id}")
