@@ -238,7 +238,7 @@ def embedding_near_pairs(
 
     ``method='rhp'`` (the 100 TB path): 64-bit random-hyperplane signatures
     (one Arrow pass), Manku 3-of-(h+3)-block combo keys, the shared
-    ``operators.lsh.lsh_candidates`` path (salted bucket expansion with
+    ``operators.lsh.lsh_candidates`` path (one band-key exchange with
     hot-bucket star-links), then an exact-cosine verify on candidates only
     (JVM ``aggregate``/``zip_with``, no Python; no Hamming filter).
     P[sig bit differs] = angle/π, so a near-dup pair (cosine ≥ ~0.995,

@@ -6,7 +6,7 @@ one fused Arrow pass per partition decodes payloads and emits only
 fixed-size artifacts (band keys + bottom-k KMV sketch) — raw audio bytes
 and PCM never cross a shuffle boundary; candidates come from the one LSH
 candidate path of the near-dup operators (`operators/lsh.lsh_candidates`:
-salted bucket expansion, hot buckets star-linked, bounded reducer state);
+one band-key exchange, hot buckets star-linked, bounded reducer state);
 the verify join ships the KMV arrays only for candidate ids (a semi-joined
 fraction of the corpus) and computes Jaccard JVM-side with array algebra —
 no Python in the verify path.

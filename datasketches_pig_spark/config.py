@@ -47,7 +47,7 @@ class DedupConfig:
                                      # the verify stage is then O(cap log²
                                      # cap), so an hour-long-episode
                                      # corpus can't stall verify tasks
-    max_bucket_size: int = 64        # LSH bucket cap before salting/split
+    max_bucket_size: int = 64        # LSH bucket cap before star links
 
     # --- clustering ---
     max_unionfind_rounds: int = 50

@@ -5,7 +5,7 @@ historical state is persisted once (bucketed signature table + bounded LSH
 bucket summaries + cluster assignments) and each new batch runs
 
     new_sigs   = signature_stage(new_clips)                 (narrow)
-    new x new  = candidate_pairs(new_bands)                 (salted expansion)
+    new x new  = candidate_pairs(new_bands)                 (band-key exchange)
     new x old  = new_bands ⋈ band-bucket store on band_key  (co-located join)
     endpoints  = new_sigs ∪ (stored_sigs ⋉ ids of pairs)    (materialized)
     verified   = verify_pairs(pairs, endpoints)
@@ -16,8 +16,8 @@ Scale contract:
   history was built; only (new, old) and (new, new) pairs are generated.
 * A hot historical bucket (e.g. viral silence, 10^8 members) costs O(new
   members) — over-cap buckets link each new member only to the bucket's
-  persisted ``center``, the same deterministic representative the original
-  salted expansion star-linked through, so connectivity composes.
+  persisted ``center``, the same deterministic representative (the bucket
+  minimum) the batch candidate step star-links to, so connectivity composes.
 * The band-bucket store is bucketed BY band_key, the signature store by
   clip_id, so neither history read shuffles the store.  The band join is
   co-located on band_key.  The signature store is read by ONE semi join
@@ -574,7 +574,7 @@ def incremental_dedup(
 
     new_bands = all_bands(new_sigs, cfg)
 
-    # new×new: the standard salted expansion over today's batch only
+    # new×new: the standard candidate step over today's batch only
     nn = candidate_pairs(new_bands, cfg)
 
     # new×old: join the day's band rows against the bounded bucket store —
@@ -663,14 +663,6 @@ def incremental_dedup(
         .filter(F.col("clip_id") != F.col("cluster_id"))
         .select(F.col("clip_id").alias("old_cluster_id"), "cluster_id")
     )
-    # hygiene: verified + comp are materialized above (localCheckpoint), so
-    # the salted expansion's internal shard caches are no longer referenced —
-    # release them here so EVERY caller (batch tools, the streaming sink's
-    # per-micro-batch loop) returns with zero cached residue instead of
-    # accumulating one shard frame per batch
-    from datasketches_pig_spark.operators.lsh import release_shard_caches
-
-    release_shard_caches()
     return IncrementalResult(
         assignments=assignments, merges=merges, verified=verified, new_sigs=new_sigs
     )

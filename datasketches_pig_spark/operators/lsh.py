@@ -1,46 +1,63 @@
 """LSH candidate-pair generation — pure DataFrame algebra, no Python in the
 hot path.
 
-Scale design (the part that must survive 1000 executors × 100 TB):
+**The distinct-candidate step** (``candidate_pairs``: ``run_pipeline`` and
+incremental new×new; ``lsh_candidates``: text MinHash/SimHash, image dHash,
+audio and embedding RHP) exchanges the ``(key, id)`` band rows once, by key:
 
-* **Salted two-level aggregation.**  A naive ``groupBy(band_key)`` puts an
-  entire bucket's member list on one reducer — a pathological bucket (10^8
-  byte-identical silence clips all sharing every band) would concentrate
-  gigabytes on a single task.  Members are therefore salted into
-  ``SALT_SHARDS`` shards first; per-reducer state is bounded by
-  ``bucket_size / SALT_SHARDS`` at level 1 and by
-  ``SALT_SHARDS × (cap + 1)`` at level 2, no matter how hot the key.
-* Pair expansion happens inside whole-stage-codegen'd array expressions
-  (nested ``transform``/``slice``) — no self-join, no bucket-size side table.
-* **Hot buckets** degrade to *star links*: every member pairs with a center
-  instead of all-pairs (O(n), connectivity through the center preserved for
-  union-find).  Level 1 star-links oversized shards to the shard center
-  immediately; level 2 links shard centers through the bucket center, so an
-  arbitrarily hot bucket costs O(n) pairs and O(n/S) peak memory.
-* Buckets at or below ``max_bucket_size`` still get exact all-pairs: a small
-  bucket is never truncated at level 1 (shard ≤ bucket ≤ cap), so level 2
-  sees its complete member list.
+* A window over the key gives each row its bucket size ``n`` (band rows,
+  repeated ``(key, id)`` rows included) and the bucket minimum.
+* Rows with ``2 ≤ n ≤ cap`` self-join on the key with ``a < b`` (a merge
+  join over the window's partitioning and order): exact all-pairs, at most
+  cap² rows per key.
+* Rows with ``n > cap`` star-link to the bucket minimum: n−1 pairs, and
+  union-find connectivity through the center.  It is the same center
+  ``bucket_summaries`` persists and incremental new×old links to.
+* One distinct on (a, b) closes the step (the caller's, for
+  ``candidate_pairs``).
+
+The non-null key filter sits below the window, so every consumer of the band
+rows has the same subtree: the rows are written to shuffle once and the other
+consumers read a ``ReusedExchange``.  The upstream lineage (for document
+dedup, the whole Arrow minhash pass) therefore runs once without a cache.
+
+Scale trade (the part that must survive 1000 executors × 100 TB): all rows of
+a hot key meet in one window task.  That task's buffer spills
+(``spark.sql.windowExec.buffer.in.memory.threshold`` /
+``spill.threshold``), so its memory stays bounded; the self-join never sees a
+hot key, so it stays bounded too.  AQE skew splitting does not apply to the
+window stage: a hot key costs one task O(n) streamed rows.  The salted
+expansion below spread those rows 16 ways, but each shard held its ids in a
+``collect_list`` that cannot spill.  The invariant: no unspillable per-key
+state, and no join on a key with more than cap rows.
+
+**The salted two-level expansion** (``_salted_pairs``) stays only behind
+``bucket_pairs``, for ``video_near_pairs``, which counts non-distinct pairs
+and reuses the persisted shard frame across queries.  Members are salted into
+``SALT_SHARDS`` shards; per-reducer state is bounded by
+``bucket_size / SALT_SHARDS`` at level 1 and by ``SALT_SHARDS × (cap + 1)``
+at level 2.  Level 1 star-links oversized shards to the shard center; level 2
+expands all-pairs for buckets ≤ cap and star-links the rest through the
+bucket center, inside codegen'd array expressions.  ``bucket_summaries``
+(the ``save_history`` / fold path) keeps the same two-level shape.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
 from datasketches_pig_spark.config import DedupConfig
 
 SALT_SHARDS = 16
 
-# shard frames persisted by _salted_pairs, released by release_shard_caches():
-# the persist is load-bearing (two consumers below must not re-run the
-# upstream Arrow signature lineage — CLAUDE.md landmine #6) but the pairs
-# frame is returned lazily, so the cache cannot be dropped inside the
-# operator without forcing eager evaluation of a potentially huge pre-
-# distinct pair stream.  ``lsh_candidates`` releases the previous query's
-# caches at its own start (bounding a long-lived session's residue to the
-# last query's caches); callers that materialize their candidates (pipeline,
-# incremental, minhash) release right after.  ``bucket_pairs`` never
-# releases: video's shard cache doubles as a cross-query cache.
+# shard frames persisted by _salted_pairs (only ``bucket_pairs`` reaches it),
+# released by release_shard_caches().  The persist is load-bearing (two
+# consumers below must not re-run the upstream lineage, CLAUDE.md landmine
+# #6) and doubles as video's cross-query cache: ``video_near_pairs`` never
+# releases, and repeated MJPEG dedup passes read it.  ``lsh_candidates``
+# releases at its own start, which bounds a mixed session's residue to the
+# caches of the video queries since the last near-dup query.
 _SHARD_CACHES: list[DataFrame] = []
 
 
@@ -156,29 +173,61 @@ def bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame
     return _salted_pairs(renamed, key, cap)
 
 
+def _band_pairs(keyed: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:
+    """(key, id) rows → (a, b) pairs with a < b, not distinct: all pairs in
+    a bucket of 2..cap rows, a star to the bucket minimum above cap (see the
+    module docstring).  Null keys pair nothing."""
+    rows = keyed.select(key, F.col(id_col).alias("id")).filter(
+        F.col(key).isNotNull()
+    )
+    w = Window.partitionBy(key)
+    sized = rows.select(
+        key,
+        "id",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.min("id").over(w).alias("center"),
+    )
+    small = sized.filter(F.col("n").between(2, cap))
+    # merge join: the window output is already partitioned and sorted by
+    # key, so the join adds no exchange, no sort and no broadcast job, and
+    # buffers at most cap rows per key (a hash join would hold a whole
+    # partition's build side in memory)
+    all_pairs = (
+        small.select(key, F.col("id").alias("a"))
+        .hint("merge")
+        .join(small.select(key, F.col("id").alias("b")), key)
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+    )
+    stars = (
+        sized.filter(F.col("n") > cap)
+        .select(F.col("center").alias("a"), F.col("id").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+    )
+    return all_pairs.unionByName(stars)
+
+
 def lsh_candidates(sigs: DataFrame, keys: Column, cap: int) -> DataFrame:
     """(id, …) signature rows + an array-of-LSH-keys column → distinct
     (a, b) candidate pairs with a < b: the one candidate step of the
     near-dup operators (MinHash bands, Manku SimHash combos, audio bands).
+    The frame is lazy: its consumer is usually a single verify join, so no
+    barrier.
 
-    Releases the previous query's shard caches first; this query's cache
-    stays registered until the caller materializes its candidates and
-    releases, or the next call here does (bounded residue) — so a query
-    that builds two candidate frames must materialize the first before
-    building the second, or the first recomputes its shards.  The frame
-    is lazy: its consumer is usually a single verify join, so no barrier.
+    The step caches nothing.  It releases the shard caches of earlier
+    ``bucket_pairs`` calls at its start all the same: a session that mixes
+    video and near-dup queries then holds at most the video caches since
+    its last near-dup query.
 
     Recall contract: complete while no key bucket exceeds ``cap``.  Keys are
     64-bit hashes of whole bands / fingerprint blocks, so an over-cap bucket
     means > cap rows agree on a full band — a mass-duplicate cluster, where
-    the salted expansion star-links and the downstream verify may drop
-    borderline (non-center) pairs; pair recall above the cap is approximate
-    (a missed pair must land over cap in every key it shares)."""
+    the expansion star-links to the bucket minimum and the downstream verify
+    may drop borderline (non-center) pairs; pair recall above the cap is
+    approximate (a missed pair must land over cap in every key it shares)."""
     release_shard_caches()
-    keyed = sigs.select(
-        F.explode(keys).alias("lsh_key"), F.col("id").alias("clip_id")
-    )
-    return _salted_pairs(keyed, "lsh_key", cap).distinct()
+    keyed = sigs.select(F.explode(keys).alias("lsh_key"), "id")
+    return _band_pairs(keyed, "lsh_key", "id", cap).distinct()
 
 
 def hamming_near_pairs(
@@ -370,4 +419,4 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(clip_id, band_key) → candidate (a, b) pairs with a < b (NOT distinct:
     the caller dedupes once).  The exact-payload key rides ``bands`` as one
     more band row per clip (``incremental.all_bands``)."""
-    return _salted_pairs(bands, "band_key", cfg.max_bucket_size)
+    return _band_pairs(bands, "band_key", "clip_id", cfg.max_bucket_size)

@@ -5,16 +5,15 @@ Stage graph (all DataFrame-native; Python only inside Arrow-batched kernels):
 
     clips ──signature_stage──▶ signatures          (narrow, fused decode+sign)
     signatures ──bands(text)∪bands(audio)∪exact──▶ bands (narrow)
-    bands ──candidate_pairs──▶ candidates          (ONE salted expansion)
+    bands ──candidate_pairs──▶ candidates          (ONE band-key exchange)
     candidates ⋈ signatures ──verify──▶ verified   (2 joins + Arrow verifier)
     verified ──union-find──▶ clusters              (iterative joins, fixpoint)
 
 The exact-byte fast path rides the same expansion: ``exact_key`` is emitted
 as one more band row per clip (byte-identical clips share every LSH band
-anyway, so this adds recall only for zero-shingle clips while deleting a
-whole second salted-aggregation subtree — two shuffles and a codegen'd
-expansion — from the candidates stage; the verifier still decides exact
-duplicates by comparing ``exact_key`` directly).
+anyway, so this adds recall only for zero-shingle clips while keeping a
+second bucket expansion out of the candidates stage; the verifier still
+decides exact duplicates by comparing ``exact_key`` directly).
 
 Checkpointing mirrors the reference's compact-sketch-between-stages contract:
 each stage materializes to Parquet under ``run_dir`` with a manifest carrying
@@ -166,10 +165,11 @@ def run_pipeline(
         store.annotate("signatures", lineage[-1])
 
     # bands: a pure JVM explode of the (already-checkpointed) signatures —
-    # its single consumer is the salted expansion, whose own shards persist
-    # covers every downstream re-scan, so without a checkpoint store there is
-    # nothing to protect and the stage stays lazy (one fewer barrier + count
-    # pass).  With a store it still materializes for resume granularity.
+    # its single consumer is the candidate step, which writes the band rows
+    # to shuffle once and reads that exchange in every branch, so without a
+    # checkpoint store there is nothing to protect and the stage stays lazy
+    # (one fewer barrier + count pass).  With a store it still materializes
+    # for resume granularity.
     # exact_key is one more band row per clip — NOT filtered on shingle
     # counts, so byte-identical silent/empty clips still pair up.  r8: one
     # fused explode (incremental.all_bands) instead of a 3-branch union —
@@ -216,12 +216,6 @@ def run_pipeline(
             "max_bucket_size_cap": cfg.max_bucket_size,
         }
         store.annotate("candidates", lineage[-1])
-    # the candidates stage is materialized (checkpoint or store): the salted
-    # expansion's internal shard cache is no longer referenced — release it
-    from datasketches_pig_spark.operators.lsh import release_shard_caches
-
-    release_shard_caches()
-
     # the signature count gates verify's broadcast joins; it is free when the
     # signatures stage just materialized (rows_out), counted on resume
     n_sigs = next(

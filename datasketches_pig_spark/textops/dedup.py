@@ -338,10 +338,7 @@ def minhash_dedup_pairs(
     routes produce identical pairs (parity test
     ``test_minhash_prefix_verify_parity``).  Both constants are read at
     call time, so tests and tools can set them."""
-    from datasketches_pig_spark.operators.lsh import (
-        lsh_candidates,
-        release_shard_caches,
-    )
+    from datasketches_pig_spark.operators.lsh import lsh_candidates
 
     p = PREFIX_SCREEN_HASHES
     min_mean = PREFIX_SCREEN_MIN_MEAN_SHINGLES
@@ -367,7 +364,6 @@ def minhash_dedup_pairs(
         cands, exact_prefix = _prefix_screen(cands, sigs, threshold, p)
     else:
         cands = lsh_candidates(sigs, F.col("bands"), cap=64).localCheckpoint()
-    release_shard_caches()  # candidates are materialized; drop the shard cache
 
     cand_ids = (
         cands.select(F.col("a").alias(id_col))

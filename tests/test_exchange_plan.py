@@ -3,7 +3,8 @@ the LSH/near-pair operators pin no ``repartition(n, keys)`` width, so every
 (a, b) aggregation keeps its map-side partial aggregate below its exchange
 (a pin moves the partial aggregate above the exchange, shuffling every raw
 pair).  Asserted on the executed plan of the pipeline's candidates frame and
-of the MJPEG gate query (a ``bucket_pairs`` caller via ``video_near_pairs``).
+of the MJPEG gate query (a ``bucket_pairs`` caller via ``video_near_pairs``);
+the candidates frame also exchanges its band rows exactly once.
 
 The doc Arrow passes (fingerprint, minhash, simhash) add no exchange on their
 input either: they read the documents table as the scan splits it."""
@@ -71,6 +72,9 @@ def _record_checkpoints(spark, monkeypatch) -> list[DataFrame]:
 
 
 def test_pipeline_candidates_keep_partial_distinct(spark, monkeypatch):
+    """The candidates stage exchanges its band rows once: after AQE, one
+    non-reused ``band_key`` exchange feeds every branch (the others read a
+    ``ReusedExchange``), with no ``collect_list`` aggregate and no cache."""
     clips_pdf, _, _ = generate_clips_pandas(20, seed=5)
     clips = spark.createDataFrame(clips_pdf)
     checkpointed = _record_checkpoints(spark, monkeypatch)
@@ -78,7 +82,18 @@ def test_pipeline_candidates_keep_partial_distinct(spark, monkeypatch):
     monkeypatch.undo()
     # the candidates stage is the first checkpointed (a, b) frame
     candidates = next(df for df in checkpointed if df.columns == ["a", "b"])
-    _assert_pair_exchange_shape(_executed_plan(candidates))
+    plan = _executed_plan(candidates)
+    _assert_pair_exchange_shape(plan)
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    nodes = [m.group(2) for m in map(_NODE.match, final.splitlines())]
+    band_exchanges = [
+        t for t in nodes if t.startswith("Exchange hashpartitioning(band_key#")
+    ]
+    assert len(band_exchanges) == 1, final
+    assert any(t.startswith("ReusedExchange") for t in nodes), final
+    assert "ObjectHashAggregate" not in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_video_gate_keeps_partial_pair_count(spark):

@@ -405,13 +405,26 @@ def test_fold_on_file_uri_base(spark, split_corpus, tmp_path_factory, monkeypatc
 
 def test_incremental_releases_shard_caches(spark, split_corpus):
     """ADVICE r4 (low): every incremental_dedup call (and therefore every
-    streaming micro-batch) must return with the salted expansion's shard
-    caches released — a long-running ingest must not accumulate one
-    persisted frame per batch."""
-    from datasketches_pig_spark.operators.lsh import _SHARD_CACHES
+    streaming micro-batch) must return without registering a shard cache —
+    a long-running ingest must not accumulate one persisted frame per batch.
+    Neither it nor run_pipeline drops a caller's own cache: the
+    ``video_near_pairs`` shard cache built first is still the only one."""
+    from datasketches_pig_spark.data.videos import synth_video_frame
+    from datasketches_pig_spark.operators.lsh import (
+        _SHARD_CACHES,
+        release_shard_caches,
+    )
+    from datasketches_pig_spark.videoops.frames import video_near_pairs
 
     day1, day2, _ = split_corpus
     cfg = DedupConfig()
+    vids = synth_video_frame(
+        spark.range(4).select(F.col("id").alias("doc_id"))
+    ).localCheckpoint()
+    release_shard_caches()
+    video_near_pairs(vids, stride=1).collect()
+    video_cache = list(_SHARD_CACHES)
+    assert len(video_cache) == 1
     for t in ("signatures", "band_buckets", "clusters"):
         spark.sql(f"DROP TABLE IF EXISTS shrel_{t}")
     r1 = run_pipeline(spark, day1, cfg)
@@ -425,7 +438,8 @@ def test_incremental_releases_shard_caches(spark, split_corpus):
         spark, day2, cfg, "shrel",
         old_transcripts=day1.select("clip_id", "transcript"),
     )
-    assert len(_SHARD_CACHES) == 0
+    assert len(_SHARD_CACHES) == 1 and _SHARD_CACHES[0] is video_cache[0]
+    assert release_shard_caches() == 1
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
-"""Hot-bucket candidate generation: salted two-level aggregation must keep
-pair count O(n) (star links), preserve connectivity, and keep exact all-pairs
-for small buckets."""
+"""Hot-bucket candidate generation: the candidate step must keep pair count
+O(n) (star links to the bucket minimum), preserve connectivity, and keep
+exact all-pairs for small buckets; the salted expansion behind
+``bucket_pairs`` keeps its own contracts."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -8,6 +9,12 @@ import pytest
 from datasketches_pig_spark.config import DedupConfig
 from datasketches_pig_spark.operators.lsh import candidate_pairs
 from datasketches_pig_spark.operators.unionfind import connected_components
+
+
+_WINDOW_BUFFER_CONFS = {
+    "spark.sql.windowExec.buffer.in.memory.threshold": "16",
+    "spark.sql.windowExec.buffer.spill.threshold": "256",
+}
 
 
 def test_hot_bucket_stays_linear_and_connected(spark):
@@ -21,11 +28,23 @@ def test_hot_bucket_stays_linear_and_connected(spark):
         F.lit(777).alias("band_key"),
     )
     bands = hot.unionByName(small)
-    pairs = candidate_pairs(bands, cfg).distinct()
+    # the hot key's 3000 rows meet in one window task: with tiny buffer
+    # thresholds that task runs the window's spilling path
+    saved = {k: spark.conf.get(k, None) for k in _WINDOW_BUFFER_CONFS}
+    try:
+        for k, v in _WINDOW_BUFFER_CONFS.items():
+            spark.conf.set(k, v)
+        pairs = candidate_pairs(bands, cfg).distinct().localCheckpoint()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     n = pairs.count()
-    # hot bucket: O(n) star links (n-1 level-2 + <= n level-1 shard stars),
-    # nowhere near the 4.5M all-pairs; small bucket: exact C(5,2)=10
-    assert n <= 2 * 3000 + 10, n
+    # hot bucket: n-1 star links to the bucket minimum, nowhere near the
+    # 4.5M all-pairs; small bucket: exact C(5,2)=10
+    assert n == 2999 + 10, n
     small_pairs = pairs.filter(F.col("a").startswith("s_")).count()
     assert small_pairs == 10
     # connectivity: every hot member reaches every other through the stars
@@ -107,10 +126,9 @@ def test_merge_bucket_summaries_semantics(spark):
 
 
 def test_shard_caches_released_after_dedup_query(spark):
-    """Hygiene contract: _salted_pairs persists its shard frame (landmine:
-    two consumers must not re-run the Arrow lineage), and minhash releases
-    that cache once its candidates are materialized — a long-lived session
-    running many dedup queries must not accumulate cached shard RDDs."""
+    """Hygiene contract: a long-lived session running many dedup queries
+    must not accumulate cached shard RDDs.  Minhash's candidate step caches
+    nothing, and its start releases what earlier video queries left."""
     import pandas as pd
 
     from datasketches_pig_spark.operators.lsh import (
@@ -136,8 +154,6 @@ def test_shard_caches_released_after_dedup_query(spark):
     )
     minhash_dedup_pairs(docs, "doc_id", "text", 3, 0.5).collect()
     assert not _SHARD_CACHES, "minhash left shard caches registered"
-    # operators whose candidate frame stays lazy leave one query's caches:
-    # test_lsh_candidates_residue_bounded
     assert release_shard_caches() == 0
 
 
@@ -186,22 +202,32 @@ def _embedding_rhp_op(spark):
     [_simhash_op, _image_op, _audio_op, _embedding_rhp_op],
     ids=["simhash", "image", "audio", "embedding_rhp"],
 )
-def test_lsh_candidates_residue_bounded(spark, make_op):
+def test_lsh_candidates_residue_bounded(spark, monkeypatch, make_op):
     """Every lazy-candidate near-dup operator builds its candidates through
-    ``lsh_candidates``, which releases the previous query's shard caches at
-    its start: back-to-back queries leave at most one query's caches."""
+    ``lsh_candidates``, which caches nothing: back-to-back queries leave no
+    shard cache registered."""
+    from datasketches_pig_spark.operators import lsh
     from datasketches_pig_spark.operators.lsh import (
         _SHARD_CACHES,
         release_shard_caches,
     )
 
+    calls = []
+    real = lsh.lsh_candidates
+
+    def recording(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lsh, "lsh_candidates", recording)
     op = make_op(spark)
     release_shard_caches()
     op().collect()
-    assert len(_SHARD_CACHES) == 1, "candidates did not go through _salted_pairs"
+    assert calls, "candidates did not go through lsh_candidates"
+    assert len(_SHARD_CACHES) == 0, "the candidate step left a shard cache"
     op().collect()
-    assert len(_SHARD_CACHES) == 1, "release-at-start did not bound residue"
-    assert release_shard_caches() == 1
+    assert len(_SHARD_CACHES) == 0, "the candidate step left a shard cache"
+    assert release_shard_caches() == 0
 
 
 def test_lsh_candidates_contract(spark):
@@ -230,6 +256,82 @@ def test_lsh_candidates_contract(spark):
     exploded = sigs.select("id", F.explode("keys").alias("k"))
     want = bucket_pairs(exploded, "k", "id", cap).distinct().collect()
     assert set(pairs) == {(r["a"], r["b"]) for r in want}
+    release_shard_caches()
+
+
+def _brute_force_pairs(rows, cap):
+    """Scalar reference of the candidate step over (key, id) rows: all
+    pairs a < b in a bucket of 2..cap rows, every member starred to the
+    bucket minimum above cap (bucket size counts rows, repeats included)."""
+    buckets: dict = {}
+    for key, i in rows:
+        buckets.setdefault(key, []).append(i)
+    pairs = set()
+    for ids in buckets.values():
+        members = sorted(set(ids))
+        if len(ids) > cap:
+            pairs.update((members[0], b) for b in members[1:])
+        elif len(ids) >= 2:
+            pairs.update(
+                (a, b) for j, a in enumerate(members) for b in members[j + 1 :]
+            )
+    return pairs
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_candidate_step_matches_brute_force(spark, id_type):
+    """``candidate_pairs`` and ``lsh_candidates`` equal the scalar reference
+    on buckets of 1, 2, cap, cap+1 and ~3000 rows, with repeated (key, id)
+    rows that move a bucket across the cap and ids shared across buckets.
+    Where no salt shard exceeds cap+1 (everything but the 3000-row bucket)
+    they also equal the salted ``bucket_pairs`` expansion."""
+    import random
+
+    from datasketches_pig_spark.operators.lsh import (
+        bucket_pairs,
+        lsh_candidates,
+        release_shard_caches,
+    )
+
+    cap = 8
+    rng = random.Random(11)
+    if id_type == "long":
+        pool = list({rng.randrange(-(2**63), 2**63) for _ in range(4000)})
+    else:
+        # unpadded: string order differs from numeric order ("id9" > "id10")
+        pool = [f"id{i}" for i in rng.sample(range(100000), 4000)]
+    sizes = {1: 1, 2: 2, 3: cap, 4: cap + 1, 5: 3000, 6: cap, 7: 5}
+    rows = [(key, i) for key, n in sizes.items() for i in rng.sample(pool, n)]
+    # repeated rows: bucket 6 goes over cap (cap+1 rows, cap distinct ids)
+    # and bucket 7 stays under it (6 rows, 5 distinct ids)
+    rows += [(6, rows[-6][1]), (7, rows[-1][1])]
+    rows += [(5, i) for _, i in rows[:40] if rng.random() < 0.5]
+    want = _brute_force_pairs(rows, cap)
+
+    keyed = spark.createDataFrame(rows, f"band_key long, clip_id {id_type}")
+    cfg = DedupConfig(max_bucket_size=cap)
+    got = [(r["a"], r["b"]) for r in candidate_pairs(keyed, cfg).collect()]
+    assert all(a < b for a, b in got)
+    assert set(got) == want
+
+    by_id: dict = {}
+    for key, i in rows:
+        by_id.setdefault(i, []).append(key)
+    sigs = spark.createDataFrame(
+        list(by_id.items()), f"id {id_type}, keys array<long>"
+    )
+    got = lsh_candidates(sigs, F.col("keys"), cap).collect()
+    got = [(r["a"], r["b"]) for r in got]
+    assert len(got) == len(set(got)), "duplicate candidate pairs"
+    assert set(got) == want
+
+    unsalted = [(k, i) for k, i in rows if k != 5]
+    salted = bucket_pairs(
+        keyed.filter(F.col("band_key") != 5), "band_key", "clip_id", cap
+    ).distinct()
+    assert {(r["a"], r["b"]) for r in salted.collect()} == _brute_force_pairs(
+        unsalted, cap
+    )
     release_shard_caches()
 
 

@@ -50,10 +50,7 @@ def run(in_dir: str, cores: int, prefix: int | None) -> None:
 
     from datasketches_pig_spark.config import DedupConfig
     from datasketches_pig_spark.incremental import all_bands
-    from datasketches_pig_spark.operators.lsh import (
-        candidate_pairs,
-        release_shard_caches,
-    )
+    from datasketches_pig_spark.operators.lsh import candidate_pairs
     from datasketches_pig_spark.operators.stages import signature_stage
     from datasketches_pig_spark.operators import verify as V
     from datasketches_pig_spark.session import get_spark, warm_python_workers
@@ -73,7 +70,6 @@ def run(in_dir: str, cores: int, prefix: int | None) -> None:
 
     sigs = signature_stage(clips, cfg).localCheckpoint()
     cands = candidate_pairs(all_bands(sigs, cfg), cfg).distinct().localCheckpoint()
-    release_shard_caches()
     n_cands = cands.count()
 
     ui = spark.sparkContext.uiWebUrl
